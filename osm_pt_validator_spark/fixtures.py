@@ -18,9 +18,11 @@ independently computable expected outputs.
 from __future__ import annotations
 
 import datetime as _dt
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
+from osm_pt_validator_spark.functions.elements import element_url_str
 from osm_pt_validator_spark.schemas import (
     NODE_SCHEMA,
     PAGES_SCHEMA,
@@ -55,17 +57,6 @@ def node_coords(node_id: int) -> tuple[float, float]:
 def stop_node_tags(node_id: int) -> dict[str, str]:
     """Tags making a node a fully valid stop_position (nodes.go:78-100)."""
     return {"public_transport": "stop_position", "bus": "yes", "name": f"Stop {node_id}"}
-
-
-def platform_node_tags(node_id: int) -> dict[str, str]:
-    """Tags making a node a fully valid platform (nodes.go:44-76),
-    including the NaPTAN code required when naptan_platform_tags=true."""
-    return {
-        "public_transport": "platform",
-        "highway": "bus_stop",
-        "name": f"Platform {node_id}",
-        "naptan:AtcoCode": f"636{node_id:06d}",
-    }
 
 
 def node_rows(extra: list[tuple[int, dict[str, str]]] | None = None) -> list[tuple]:
@@ -123,12 +114,8 @@ _OW = "way with oneway tag is traversed in wrong direction"
 _ORD = "ways are incorrectly ordered"
 
 
-def _wurl(wid: int) -> str:
-    return f"https://www.openstreetmap.org/way/{wid}"
-
-
-def _nurl(nid: int) -> str:
-    return f"https://www.openstreetmap.org/node/{nid}"
+_wurl = partial(element_url_str, "way")
+_nurl = partial(element_url_str, "node")
 
 
 WAY_ORDER_CASES: list[tuple[str, list[int], list[int], list[tuple[str, str]]]] = [

@@ -1,7 +1,14 @@
 """Scalar column expressions over OSM-shaped columns.
 
-Everything here is a pure ``pyspark.sql.functions`` composition —
-JVM-side, whole-stage-codegen friendly, no Python on the hot path.
+Every Column helper here is a pure ``pyspark.sql.functions``
+composition — JVM-side, whole-stage-codegen friendly, no Python on the
+hot path.
+
+This is the one module that knows the OSM URL format and the
+verdict-array format: every
+validator stage builds an ``ARRAY<STRUCT<stage_no,seq,url,message>>``
+per relation from ``check``/``verdict``/``number_checks`` and
+``explode_verdicts`` turns it into VERDICT rows.
 
 Reference semantics:
   * element URL: ``https://www.openstreetmap.org/{type}/{id}``
@@ -13,12 +20,22 @@ Reference semantics:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ROLE_STOPS = ("stop", "stop_entry_only", "stop_exit_only")
 ROLE_PLATFORMS = ("platform", "platform_entry_only", "platform_exit_only")
 ROLES_STOPLIKE = ROLE_STOPS + ROLE_PLATFORMS
+
+OSM_URL = "https://www.openstreetmap.org/"
+
+VERDICT_TYPE = "struct<stage_no:int,seq:bigint,url:string,message:string>"
+
+#: seq base for checks that follow a stage's per-member verdicts, so
+#: they sort after every member position
+TAIL_SEQ_BASE = 1_000_000_000
 
 
 def element_url(elem_type: Column | str, ref: Column | str) -> Column:
@@ -26,7 +43,54 @@ def element_url(elem_type: Column | str, ref: Column | str) -> Column:
     reference's ``fmt.Sprintf`` so verdicts compare byte-equal."""
     t = F.col(elem_type) if isinstance(elem_type, str) else elem_type
     r = F.col(ref) if isinstance(ref, str) else ref
-    return F.format_string("https://www.openstreetmap.org/%s/%d", t, r)
+    return F.format_string(OSM_URL + "%s/%d", t, r)
+
+
+def relation_url(relation_id: Column | str) -> Column:
+    """``element_url`` of a relation."""
+    r = F.col(relation_id) if isinstance(relation_id, str) else relation_id
+    return F.format_string(OSM_URL + "relation/%d", r)
+
+
+def element_url_str(elem_type: str, ref: int) -> str:
+    """``element_url`` for pure-Python callers (Arrow-worker cores)."""
+    return f"{OSM_URL}{elem_type}/{ref}"
+
+
+def check(url: Column, message: Column) -> Column:
+    """A fired check, not yet numbered; NULL-guard it with ``F.when``."""
+    return F.struct(url.alias("url"), message.alias("message"))
+
+
+def verdict(stage: int, seq: Column, url: Column, message: Column) -> Column:
+    """One VERDICT_TYPE element."""
+    return F.struct(
+        F.lit(stage).cast("int").alias("stage_no"),
+        seq.cast("long").alias("seq"),
+        url.alias("url"),
+        message.alias("message"),
+    )
+
+
+def number_checks(stage: int, checks: Sequence[Column], seq_base: int = 0) -> Column:
+    """Drop the NULL (not fired) checks and number the rest by position
+    from ``seq_base`` — the reference's append-order emission."""
+    fired = F.filter(F.array(*checks), lambda v: v.isNotNull())
+    return F.transform(
+        fired, lambda v, i: verdict(stage, i + F.lit(seq_base), v["url"], v["message"])
+    )
+
+
+def explode_verdicts(df: DataFrame, arr: Column) -> DataFrame:
+    """One VERDICT row (relation_id, stage_no, seq, url, message) per
+    element of ``arr``; ``df`` must carry relation_id."""
+    return df.select("relation_id", F.explode(arr).alias("v")).select(
+        "relation_id",
+        F.col("v.stage_no").alias("stage_no"),
+        F.col("v.seq").alias("seq"),
+        F.col("v.url").alias("url"),
+        F.col("v.message").alias("message"),
+    )
 
 
 def render_verdict(message: Column | str, url: Column | str) -> Column:

@@ -456,13 +456,13 @@ def dsir_weights(
     Scale shape (100 TB raw corpus, small target by definition —
     DSIR's target is a domain sample): ONE corpus scan explodes
     grams into (doc, bucket) occurrence counts (map-side combining
-    groupBy); the raw histogram is a second combining agg over THAT
-    table, never a re-scan; the target side scans its small frame
-    once. Histograms and totals (<= `buckets` rows) broadcast back
-    onto the per-doc counts — no window, no driver collect, and the
-    only large exchange is the (doc, bucket) agg. Docs with zero
-    grams carry no evidence either way and are absent from the
-    output (weight undefined, not 0).
+    groupBy); the raw and target histograms are ONE combining agg
+    over THAT table unioned with the target's grams, never a re-scan;
+    the target side scans its small frame once. The log-ratios
+    (<= `buckets` rows) broadcast back onto the per-doc counts — no
+    driver collect, and the only large exchange is the (doc, bucket)
+    agg. Docs with zero grams carry no evidence either way and are
+    absent from the output (weight undefined, not 0).
 
     Output: (id_col, weight_micro, n_grams) — selection composes
     downstream (rank / threshold / weighted_sample on weight_micro).
@@ -490,38 +490,37 @@ def dsir_weights(
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=True)
     )
-    # totals as windows over the <= `buckets`-row histograms (every
-    # raw bucket row carries rn; tn rides the target rows through the
-    # left join and max() fills the target-less buckets) — no 1-row
-    # aggs, no crossJoin stages.
+    # ONE histogram of both sides: the union's groupBy combines map-side
+    # to <= `buckets` rows per partition, and the totals are windows over
+    # the <= `buckets`-row result — no histogram join, no 1-row aggs, no
+    # crossJoin.
+    # Summing t over every bucket (target-only ones included, dropped
+    # after) gives the true target total even when no target bucket
+    # occurs in the corpus.
     every = Window.partitionBy(F.lit(1))
-    raw_hist = doc_counts.groupBy("bucket").agg(
-        F.sum("c").alias("r")
-    ).withColumn("rn", F.sum("r").over(every))
-    tgt_hist = (
-        bucketed(target, with_id=False)
+    hist = (
+        doc_counts.select("bucket", F.col("c").alias("r"), F.lit(0).alias("t"))
+        .unionByName(
+            bucketed(target, with_id=False).select(
+                "bucket", F.lit(0).cast("long").alias("r"), F.lit(1).alias("t")
+            )
+        )
         .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("t"))
+        .agg(F.sum("r").alias("r"), F.sum("t").alias("t"))
+        .withColumn("rn", F.sum("r").over(every))
         .withColumn("tn", F.sum("t").over(every))
     )
-    ratio = (
-        raw_hist.join(F.broadcast(tgt_hist), "bucket", "left")
-        .withColumn("tn_all", F.max("tn").over(every))
-        .select(
-            "bucket",
-            F.round(
-                (
-                    F.log(
-                        (F.coalesce(F.col("t"), F.lit(0)) + 1.0)
-                        / (F.coalesce(F.col("tn_all"), F.lit(0)) + buckets)
-                    )
-                    - F.log((F.col("r") + 1.0) / (F.col("rn") + buckets))
-                )
-                * 1e6
+    ratio = hist.filter(F.col("r") > 0).select(
+        "bucket",
+        F.round(
+            (
+                F.log((F.col("t") + 1.0) / (F.col("tn") + buckets))
+                - F.log((F.col("r") + 1.0) / (F.col("rn") + buckets))
             )
-            .cast("long")
-            .alias("lr_micro"),
+            * 1e6
         )
+        .cast("long")
+        .alias("lr_micro"),
     )
     return (
         doc_counts.join(F.broadcast(ratio), "bucket")

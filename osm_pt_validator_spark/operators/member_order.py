@@ -1,5 +1,5 @@
 """Member-order validator (A3) — validateREMemberOrder re-expressed as
-pure array/column algebra over the relations table. Zero shuffles: the
+pure array/column algebra over the members array. Zero shuffles: the
 sequential Go scan (route_relation.go:50-106) reduces exactly to
 min/max index comparisons over the members array.
 
@@ -16,17 +16,26 @@ Flag semantics (proved equivalent to the scan):
   * !startedRoute  <=> no non-stoplike member => "route does not
     contain any route ways"
 
-Per-member verdicts (emitted first, in member order):
+Per-member verdicts (emitted first, seq = member position):
   * node with role ''            => "stop/platform with empty role"
   * role not '' and not in enum  => "element has unexpected role '<r>'"
+
+The four flag verdicts follow with url '' and seq from TAIL_SEQ_BASE.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from osm_pt_validator_spark.functions.elements import ROLES_STOPLIKE
+from osm_pt_validator_spark.functions.elements import (
+    TAIL_SEQ_BASE,
+    check,
+    element_url,
+    is_stoplike_role,
+    number_checks,
+    verdict,
+)
 from osm_pt_validator_spark.schemas import STAGE_MEMBER_ORDER
 
 MSG_EMPTY_ROLE = "stop/platform with empty role"
@@ -35,81 +44,48 @@ MSG_STOP_AFTER_ROUTE = "stop/platform appears after route ways"
 MSG_NO_STOPS = "route does not contain a stop/platform"
 MSG_NO_WAYS = "route does not contain any route ways"
 
-#: flag verdicts sort after all per-member verdicts within the stage
-FLAG_SEQ_BASE = 1_000_000_000
 
+def member_order_verdicts(members: Column) -> Column:
+    """Stage-2 verdict array of one relation's members."""
+    def member_verdict(m: Column, i: Column) -> Column:
+        url = element_url(m["type"], m["ref"])
+        return F.when(
+            (m["type"] == "node") & (m["role"] == ""),
+            verdict(STAGE_MEMBER_ORDER, i, url, F.lit(MSG_EMPTY_ROLE)),
+        ).when(
+            (m["role"] != "") & ~is_stoplike_role(m["role"]),
+            verdict(
+                STAGE_MEMBER_ORDER,
+                i,
+                url,
+                F.format_string("element has unexpected role '%s'", m["role"]),
+            ),
+        )
 
-def _stoplike(role: Column) -> Column:
-    return role.isin(*ROLES_STOPLIKE)
+    per_member = F.filter(F.transform(members, member_verdict), lambda v: v.isNotNull())
 
-
-def validate_member_order(relations: DataFrame) -> DataFrame:
-    """Stage-2 verdicts from the members array, one projection pass."""
-    rel_url = F.format_string(
-        "https://www.openstreetmap.org/relation/%d", F.col("relation_id")
-    )
-
-    members = F.col("members")
     # indices of stoplike / non-stoplike members
     idx = F.transform(members, lambda m, i: i)
-    stop_idx = F.filter(idx, lambda i: _stoplike(F.element_at(members, i + 1).role))
-    nonstop_idx = F.filter(idx, lambda i: ~_stoplike(F.element_at(members, i + 1).role))
-
+    stoplike_at = lambda i: is_stoplike_role(F.element_at(members, i + 1)["role"])  # noqa: E731
+    stop_idx = F.filter(idx, stoplike_at)
+    nonstop_idx = F.filter(idx, lambda i: ~stoplike_at(i))
     has_stop = F.size(stop_idx) > 0
     has_nonstop = F.size(nonstop_idx) > 0
-    min_stop = F.array_min(stop_idx)
-    max_stop = F.array_max(stop_idx)
-    min_nonstop = F.array_min(nonstop_idx)
-
-    route_before_stops = has_nonstop & (~has_stop | (min_nonstop < min_stop))
-    stop_after_route = has_stop & has_nonstop & (max_stop > min_nonstop)
-
-    flags = F.filter(
-        F.array(
-            F.when(route_before_stops, F.lit(MSG_ROUTE_BEFORE_STOPS)),
-            F.when(stop_after_route, F.lit(MSG_STOP_AFTER_ROUTE)),
-            F.when(~has_stop, F.lit(MSG_NO_STOPS)),
-            F.when(~has_nonstop, F.lit(MSG_NO_WAYS)),
-        ),
-        lambda v: v.isNotNull(),
+    route_before_stops = has_nonstop & (
+        ~has_stop | (F.array_min(nonstop_idx) < F.array_min(stop_idx))
     )
-    flag_verdicts = (
-        relations.select("relation_id", F.posexplode(flags).alias("i", "message"))
-        .select(
-            "relation_id",
-            F.lit(STAGE_MEMBER_ORDER).alias("stage_no"),
-            (F.lit(FLAG_SEQ_BASE) + F.col("i")).alias("seq"),
-            F.lit("").alias("url"),
-            "message",
-        )
+    stop_after_route = has_stop & has_nonstop & (
+        F.array_max(stop_idx) > F.array_min(nonstop_idx)
     )
-
-    # per-member verdicts: posexplode is a generator, not a shuffle
-    m = relations.select(
-        "relation_id", F.posexplode("members").alias("member_idx", "m")
-    ).select(
-        "relation_id",
-        "member_idx",
-        F.col("m.type").alias("type"),
-        F.col("m.ref").alias("ref"),
-        F.col("m.role").alias("role"),
+    no_url = F.lit("")
+    flags = number_checks(
+        STAGE_MEMBER_ORDER,
+        [
+            F.when(route_before_stops, check(no_url, F.lit(MSG_ROUTE_BEFORE_STOPS))),
+            F.when(stop_after_route, check(no_url, F.lit(MSG_STOP_AFTER_ROUTE))),
+            F.when(~has_stop, check(no_url, F.lit(MSG_NO_STOPS))),
+            F.when(~has_nonstop, check(no_url, F.lit(MSG_NO_WAYS))),
+        ],
+        seq_base=TAIL_SEQ_BASE,
     )
-    member_url = F.format_string(
-        "https://www.openstreetmap.org/%s/%d", F.col("type"), F.col("ref")
-    )
-    per_member = m.select(
-        "relation_id",
-        F.lit(STAGE_MEMBER_ORDER).alias("stage_no"),
-        F.col("member_idx").cast("long").alias("seq"),
-        member_url.alias("url"),
-        F.when(
-            (F.col("type") == "node") & (F.col("role") == ""), F.lit(MSG_EMPTY_ROLE)
-        )
-        .when(
-            (F.col("role") != "") & ~_stoplike(F.col("role")),
-            F.format_string("element has unexpected role '%s'", F.col("role")),
-        )
-        .alias("message"),
-    ).filter(F.col("message").isNotNull())
-
-    return per_member.unionByName(flag_verdicts)
+    return F.concat(per_member, flags)

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osm_pt_validator_spark.functions.elements import (
+    check,
+    element_url,
     is_platform_role,
     is_stop_role,
 )
@@ -58,31 +60,27 @@ def _platform_checks(tags: Column, url: Column, naptan: bool) -> list[Column]:
     pt = tags.getItem("public_transport")
     highway = tags.getItem("highway")
     checks = [
-        F.when(
-            pt.isNull(),
-            F.struct(url.alias("url"), F.lit("node is missing public_transport tag").alias("message")),
-        ).when(
-            pt != "platform",
-            F.struct(url.alias("url"), F.lit("node should have public_transport=platform").alias("message")),
+        F.when(pt.isNull(), check(url, F.lit("node is missing public_transport tag"))).when(
+            pt != "platform", check(url, F.lit("node should have public_transport=platform"))
         ),
         F.when(
             F.map_contains_key(tags, F.lit("disused:highway")),
-            F.struct(url.alias("url"), F.lit("node has disused:highway tag").alias("message")),
+            check(url, F.lit("node has disused:highway tag")),
         ),
         F.when(
             highway.isNotNull() & (highway != "bus_stop"),
-            F.struct(url.alias("url"), F.lit("node should have highway=bus_stop").alias("message")),
+            check(url, F.lit("node should have highway=bus_stop")),
         ),
         F.when(
             ~F.map_contains_key(tags, F.lit("name")),
-            F.struct(url.alias("url"), F.lit("node is missing name tag").alias("message")),
+            check(url, F.lit("node is missing name tag")),
         ),
     ]
     if naptan:
         checks.append(
             F.when(
                 ~F.map_contains_key(tags, F.lit("naptan:AtcoCode")),
-                F.struct(url.alias("url"), F.lit("missing tag 'naptan:AtcoCode'").alias("message")),
+                check(url, F.lit("missing tag 'naptan:AtcoCode'")),
             )
         )
     return checks
@@ -93,17 +91,11 @@ def _stop_checks(tags: Column, url: Column) -> list[Column]:
     pt = tags.getItem("public_transport")
     bus = tags.getItem("bus")
     return [
-        F.when(
-            pt.isNull(),
-            F.struct(url.alias("url"), F.lit("node is missing public_transport tag").alias("message")),
-        ).when(
+        F.when(pt.isNull(), check(url, F.lit("node is missing public_transport tag"))).when(
             pt != "stop_position",
-            F.struct(url.alias("url"), F.lit("node should have public_transport=stop_position").alias("message")),
+            check(url, F.lit("node should have public_transport=stop_position")),
         ),
-        F.when(
-            bus.isNotNull() & (bus != "yes"),
-            F.struct(url.alias("url"), F.lit("node should have bus=yes").alias("message")),
-        ),
+        F.when(bus.isNotNull() & (bus != "yes"), check(url, F.lit("node should have bus=yes"))),
     ]
 
 
@@ -117,7 +109,7 @@ def validate_relation_nodes(
     verdicts are discarded by the reference).
     """
     j = _checked_node_members(members, nodes).filter(F.col("node_id").isNotNull())
-    url = F.format_string("https://www.openstreetmap.org/node/%d", F.col("ref"))
+    url = element_url(F.lit("node"), "ref")
     tags = F.col("tags")
 
     def pad(checks: list[Column]) -> Column:

@@ -27,7 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_pt_validator_spark.config import DEFAULT_CONFIG, ValidationConfig
-from osm_pt_validator_spark.functions.elements import is_ptv2
+from osm_pt_validator_spark.functions.elements import (
+    is_ptv2,
+    relation_url,
+    render_verdict,
+)
 from osm_pt_validator_spark.operators.node_checks import (
     missing_node_errors,
     validate_relation_nodes,
@@ -36,13 +40,12 @@ from osm_pt_validator_spark.operators.route_master import (
     split_route_master_members,
     validate_route_masters,
 )
+from osm_pt_validator_spark.operators.set_stages import set_based_verdicts
 from osm_pt_validator_spark.operators.way_order import (
     STAGE_ENGINE_ERROR,
     validate_way_and_stop_order,
 )
-from osm_pt_validator_spark.schemas import STAGE_NODE_COUNT, STAGE_PTV2
-
-MSG_PTV2 = "tag 'public_transport:version' should have value '2'"
+from osm_pt_validator_spark.schemas import STAGE_NODE_COUNT
 
 
 def explode_members(relations: DataFrame) -> DataFrame:
@@ -73,8 +76,6 @@ def validate_route_relations(
     engine_errors: (relation_id, message) — the reference's Go-error
     channel (load failures), distinct from verdicts.
     """
-    from osm_pt_validator_spark.operators.set_stages import set_based_verdicts
-
     # stages 0 + 1 + 2 + 7 fused: ONE projection pass over relations
     # (separate per-stage branches would re-scan the table per stage)
     vset = set_based_verdicts(relations, config)
@@ -198,8 +199,6 @@ def collect_invalid(verdicts: DataFrame) -> DataFrame:
     (pkg/snsEvents/types.go:5-10): verdicts grouped per relation, in
     emission order, plus the reference's printed form per verdict
     ("{message} - {url}", validator.go:31-33) as `rendered`."""
-    from osm_pt_validator_spark.functions.elements import render_verdict
-
     sorted_vs = F.sort_array(
         F.collect_list(F.struct("stage_no", "seq", "url", "message"))
     )
@@ -219,10 +218,5 @@ def collect_invalid(verdicts: DataFrame) -> DataFrame:
                 lambda v: render_verdict(v["message"], v["url"]),
             ),
         )
-        .withColumn(
-            "relation_url",
-            F.format_string(
-                "https://www.openstreetmap.org/relation/%d", F.col("relation_id")
-            ),
-        )
+        .withColumn("relation_url", relation_url("relation_id"))
     )

@@ -11,6 +11,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_pt_validator_spark.functions.elements import (
+    TAIL_SEQ_BASE,
+    check,
+    element_url,
+    explode_verdicts,
+    number_checks,
+    relation_url,
+    verdict,
+)
 from osm_pt_validator_spark.operators.tags import (
     RM_REQUIRED_TAGS,
     missing_tag_checks,
@@ -23,52 +32,33 @@ STAGE_MASTER = 0
 MSG_NOT_RELATION = "member is not a relation"
 MSG_NOT_ENOUGH_VARIANTS = "not enough route variants"
 
-_TAIL_SEQ = 1_000_000_000
-
 
 def validate_route_masters(
     relations: DataFrame, minimum_route_variants: int
 ) -> DataFrame:
-    rel_url = F.format_string(
-        "https://www.openstreetmap.org/relation/%d", F.col("relation_id")
+    members = F.col("members")
+    url = relation_url("relation_id")
+    per_member = F.filter(
+        F.transform(
+            members,
+            lambda m, i: F.when(
+                m["type"] != "relation",
+                verdict(STAGE_MASTER, i, element_url(m["type"], m["ref"]), F.lit(MSG_NOT_RELATION)),
+            ),
+        ),
+        lambda v: v.isNotNull(),
     )
-
-    m = relations.select(
-        "relation_id", F.posexplode("members").alias("member_idx", "m")
-    )
-    member_verdicts = m.filter(F.col("m.type") != "relation").select(
-        "relation_id",
-        F.lit(STAGE_MASTER).alias("stage_no"),
-        F.col("member_idx").cast("long").alias("seq"),
-        F.format_string(
-            "https://www.openstreetmap.org/%s/%d", F.col("m.type"), F.col("m.ref")
-        ).alias("url"),
-        F.lit(MSG_NOT_RELATION).alias("message"),
-    )
-
-    rel_count = F.size(F.filter(F.col("members"), lambda x: x["type"] == "relation"))
-    tail_checks = []
+    tail = []
     if minimum_route_variants > 0:
-        tail_checks.append(
-            F.when(
-                rel_count < minimum_route_variants,
-                F.struct(
-                    rel_url.alias("url"), F.lit(MSG_NOT_ENOUGH_VARIANTS).alias("message")
-                ),
-            )
+        rel_count = F.size(F.filter(members, lambda m: m["type"] == "relation"))
+        tail.append(
+            F.when(rel_count < minimum_route_variants, check(url, F.lit(MSG_NOT_ENOUGH_VARIANTS)))
         )
-    tail_checks.extend(missing_tag_checks(F.col("tags"), rel_url, RM_REQUIRED_TAGS))
-    tail_arr = F.filter(F.array(*tail_checks), lambda v: v.isNotNull())
-    tail_verdicts = relations.select(
-        "relation_id", F.posexplode(tail_arr).alias("i", "v")
-    ).select(
-        "relation_id",
-        F.lit(STAGE_MASTER).alias("stage_no"),
-        (F.lit(_TAIL_SEQ) + F.col("i")).alias("seq"),
-        F.col("v.url").alias("url"),
-        F.col("v.message").alias("message"),
+    tail.extend(missing_tag_checks(F.col("tags"), url, RM_REQUIRED_TAGS))
+    return explode_verdicts(
+        relations,
+        F.concat(per_member, number_checks(STAGE_MASTER, tail, seq_base=TAIL_SEQ_BASE)),
     )
-    return member_verdicts.unionByName(tail_verdicts)
 
 
 def split_route_master_members(route_masters: DataFrame) -> DataFrame:

@@ -4,12 +4,11 @@
 gate, RE tags, member order, node count) which are all pure column
 algebra over (relation_id, members, tags). Computing them as separate
 DataFrame branches re-scans the relations table once per stage — fine
-at test scale, 4x wasted I/O at 100 TB. This module builds ONE
+at test scale, 4x wasted I/O at 100 TB. This module concatenates the
+stages' verdict-array builders (tags.re_tag_verdicts,
+member_order.member_order_verdicts, node_count_verdicts) into ONE
 ARRAY<STRUCT<stage_no,seq,url,message>> per relation in a single
-select, then posexplodes: one scan, zero shuffles, whole-stage codegen.
-
-Semantics identical to the per-stage operators (tags.py,
-member_order.py, node_count.py) — the pipeline tests cover both paths.
+select, then explodes: one scan, zero shuffles, whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -18,43 +17,35 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osm_pt_validator_spark.config import ValidationConfig
-from osm_pt_validator_spark.functions.elements import ROLES_STOPLIKE, is_ptv2
-from osm_pt_validator_spark.operators.member_order import (
-    FLAG_SEQ_BASE,
-    MSG_EMPTY_ROLE,
-    MSG_NO_STOPS,
-    MSG_NO_WAYS,
-    MSG_ROUTE_BEFORE_STOPS,
-    MSG_STOP_AFTER_ROUTE,
+from osm_pt_validator_spark.functions.elements import (
+    VERDICT_TYPE,
+    explode_verdicts,
+    is_ptv2,
+    relation_url,
+    verdict,
 )
-from osm_pt_validator_spark.operators.node_count import MSG_NOT_ENOUGH
-from osm_pt_validator_spark.operators.tags import RE_REQUIRED_TAGS
-from osm_pt_validator_spark.schemas import (
-    STAGE_MEMBER_ORDER,
-    STAGE_NODE_COUNT,
-    STAGE_PTV2,
-    STAGE_TAGS,
-)
+from osm_pt_validator_spark.operators.member_order import member_order_verdicts
+from osm_pt_validator_spark.operators.tags import re_tag_verdicts
+from osm_pt_validator_spark.schemas import STAGE_NODE_COUNT, STAGE_PTV2
 
 MSG_PTV2 = "tag 'public_transport:version' should have value '2'"
-
-_V = "struct<stage_no:int,seq:bigint,url:string,message:string>"
-
-
-def _v(stage: int, seq: Column, url: Column, message: Column) -> Column:
-    return F.struct(
-        F.lit(stage).cast("int").alias("stage_no"),
-        seq.cast("long").alias("seq"),
-        url.alias("url"),
-        message.alias("message"),
-    )
+MSG_NOT_ENOUGH = "relation does not have enough node members"
 
 
-def _renumber(stage: int, fired: Column, seq_base: int = 0) -> Column:
-    """Assign compacted seq = position among fired checks (matches the
-    reference's append-order emission)."""
-    return F.transform(
-        fired, lambda v, i: _v(stage, i + F.lit(seq_base), v["url"], v["message"])
+def node_count_verdicts(members: Column, url: Column, minimum: int) -> Column:
+    """A1 — validateNodeMembersCount (node_count.go:7-21);
+    ``minimum < 1`` disables the check (node_count.go:9-11)."""
+    if minimum < 1:
+        return F.array().cast(f"array<{VERDICT_TYPE}>")
+    node_count = F.size(F.filter(members, lambda m: m["type"] == "node"))
+    return F.filter(
+        F.array(
+            F.when(
+                node_count < minimum,
+                verdict(STAGE_NODE_COUNT, F.lit(0), url, F.lit(MSG_NOT_ENOUGH)),
+            )
+        ),
+        lambda v: v.isNotNull(),
     )
 
 
@@ -64,102 +55,16 @@ def set_based_verdicts(
     """Stages 0 + 1 + 2 + 7 in one pass over the relations table."""
     tags = F.col("tags")
     members = F.col("members")
-    rel_url = F.format_string(
-        "https://www.openstreetmap.org/relation/%d", F.col("relation_id")
-    )
-
-    def uv(url: Column, message: Column) -> Column:
-        return F.struct(url.alias("url"), message.alias("message"))
-
-    # ---- stage 1: RE tag checks (tags.go:5-29, route_relation.go:108-125)
-    s1_checks = [
-        F.when(~F.map_contains_key(tags, F.lit(k)), uv(rel_url, F.lit(f"missing tag '{k}'")))
-        for k in RE_REQUIRED_TAGS
-    ]
-    for key, exp in (("type", "route"), ("public_transport:version", "2")):
-        val = tags.getItem(key)
-        s1_checks.append(
-            F.when(val.isNull(), uv(rel_url, F.lit(f"missing tag '{key}'"))).when(
-                val != exp, uv(rel_url, F.lit(f"tag '{key}' should have value '{exp}'"))
-            )
-        )
-    s1 = _renumber(STAGE_TAGS, F.filter(F.array(*s1_checks), lambda v: v.isNotNull()))
-
-    # ---- stage 2: member order (route_relation.go:50-106)
-    stoplike = lambda m: m["role"].isin(*ROLES_STOPLIKE)  # noqa: E731
-    member_url = lambda m: F.format_string(  # noqa: E731
-        "https://www.openstreetmap.org/%s/%d", m["type"], m["ref"]
-    )
-    s2_members = F.filter(
-        F.transform(
-            members,
-            lambda m, i: F.when(
-                (m["type"] == "node") & (m["role"] == ""),
-                _v(STAGE_MEMBER_ORDER, i, member_url(m), F.lit(MSG_EMPTY_ROLE)),
-            ).when(
-                (m["role"] != "") & ~stoplike(m),
-                _v(
-                    STAGE_MEMBER_ORDER,
-                    i,
-                    member_url(m),
-                    F.format_string("element has unexpected role '%s'", m["role"]),
-                ),
-            ),
-        ),
-        lambda v: v.isNotNull(),
-    )
-    idx = F.transform(members, lambda m, i: i)
-    stop_idx = F.filter(idx, lambda i: stoplike(F.element_at(members, i + 1)))
-    nonstop_idx = F.filter(idx, lambda i: ~stoplike(F.element_at(members, i + 1)))
-    has_stop = F.size(stop_idx) > 0
-    has_nonstop = F.size(nonstop_idx) > 0
-    route_before = has_nonstop & (
-        ~has_stop | (F.array_min(nonstop_idx) < F.array_min(stop_idx))
-    )
-    stop_after = has_stop & has_nonstop & (
-        F.array_max(stop_idx) > F.array_min(nonstop_idx)
-    )
-    s2_flags = _renumber(
-        STAGE_MEMBER_ORDER,
-        F.filter(
-            F.array(
-                F.when(route_before, uv(F.lit(""), F.lit(MSG_ROUTE_BEFORE_STOPS))),
-                F.when(stop_after, uv(F.lit(""), F.lit(MSG_STOP_AFTER_ROUTE))),
-                F.when(~has_stop, uv(F.lit(""), F.lit(MSG_NO_STOPS))),
-                F.when(~has_nonstop, uv(F.lit(""), F.lit(MSG_NO_WAYS))),
-            ),
-            lambda v: v.isNotNull(),
-        ),
-        seq_base=FLAG_SEQ_BASE,
-    )
-
-    # ---- stage 7: node count (node_count.go:7-21)
-    if config.minimum_node_members >= 1:
-        node_count = F.size(F.filter(members, lambda m: m["type"] == "node"))
-        s7 = F.filter(
-            F.array(
-                F.when(
-                    node_count < config.minimum_node_members,
-                    _v(STAGE_NODE_COUNT, F.lit(0), rel_url, F.lit(MSG_NOT_ENOUGH)),
-                )
-            ),
-            lambda v: v.isNotNull(),
-        )
-    else:
-        s7 = F.array().cast(f"array<{_V}>")
-
-    # ---- stage 0 gate: non-PTv2 relations emit ONLY the gate verdict
-    all_checks = F.when(
+    url = relation_url("relation_id")
+    # stage 0 gate: non-PTv2 relations emit ONLY the gate verdict
+    checks = F.when(
         ~is_ptv2(tags),
-        F.array(_v(STAGE_PTV2, F.lit(0), rel_url, F.lit(MSG_PTV2))),
-    ).otherwise(F.concat(s1, s2_members, s2_flags, s7))
-
-    return relations.select(
-        "relation_id", F.explode(all_checks).alias("v")
-    ).select(
-        "relation_id",
-        F.col("v.stage_no").alias("stage_no"),
-        F.col("v.seq").alias("seq"),
-        F.col("v.url").alias("url"),
-        F.col("v.message").alias("message"),
+        F.array(verdict(STAGE_PTV2, F.lit(0), url, F.lit(MSG_PTV2))),
+    ).otherwise(
+        F.concat(
+            re_tag_verdicts(tags, url),
+            member_order_verdicts(members),
+            node_count_verdicts(members, url, config.minimum_node_members),
+        )
     )
+    return explode_verdicts(relations, checks)

@@ -1,10 +1,9 @@
 """Tag validators — the T-family (SURVEY §2.3), fully set-based.
 
-All checks compile to a single projection pass over the relations /
-nodes DataFrame: per row we build an ARRAY<STRUCT<url,message>> of
-fired checks with `when`-guarded literals, drop the nulls with
-`filter`, and `posexplode` so the array position becomes the verdict
-sequence number. No joins, no shuffles, whole-stage codegen throughout.
+Every check is a ``when``-guarded ``check(url, message)`` over the
+tags map; the stage builder numbers the fired ones by position
+(``elements.number_checks``), so the whole family is one projection:
+no joins, no shuffles, whole-stage codegen throughout.
 
 Reference semantics:
   * checkTagsPresent / checkTagValue   pkg/validation/tags.go:5-29
@@ -18,27 +17,21 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from osm_pt_validator_spark.functions.elements import check, number_checks
 from osm_pt_validator_spark.schemas import STAGE_TAGS
 
 RE_REQUIRED_TAGS = ("from", "to", "name", "operator", "ref")
 RM_REQUIRED_TAGS = ("name", "ref", "operator")
 
 
-def _verdict_struct(url: Column, message: Column) -> Column:
-    return F.struct(url.alias("url"), message.alias("message"))
-
-
 def missing_tag_checks(tags: Column, url: Column, keys: Sequence[str]) -> list[Column]:
     """checkTagsPresent (tags.go:5-18): one verdict per absent key, in
     the given key order."""
     return [
-        F.when(
-            ~F.map_contains_key(tags, F.lit(k)),
-            _verdict_struct(url, F.lit(f"missing tag '{k}'")),
-        )
+        F.when(~F.map_contains_key(tags, F.lit(k)), check(url, F.lit(f"missing tag '{k}'")))
         for k in keys
     ]
 
@@ -47,48 +40,22 @@ def tag_value_check(tags: Column, url: Column, key: str, expected: str) -> Colum
     """checkTagValue (tags.go:20-29): absent => missing-tag verdict;
     wrong value => should-have-value verdict."""
     val = tags.getItem(key)
-    return (
-        F.when(val.isNull(), _verdict_struct(url, F.lit(f"missing tag '{key}'")))
-        .when(
-            val != F.lit(expected),
-            _verdict_struct(url, F.lit(f"tag '{key}' should have value '{expected}'")),
-        )
+    return F.when(val.isNull(), check(url, F.lit(f"missing tag '{key}'"))).when(
+        val != F.lit(expected),
+        check(url, F.lit(f"tag '{key}' should have value '{expected}'")),
     )
 
 
-def explode_verdict_array(
-    df: DataFrame, checks: list[Column], stage_no: int
-) -> DataFrame:
-    """Compact the per-row check array and explode with position = seq.
-
-    Expects df to carry relation_id; emits the VERDICT-shaped columns.
-    """
-    arr = F.filter(F.array(*checks), lambda v: v.isNotNull())
-    return (
-        df.select("relation_id", F.posexplode(arr).alias("seq", "v"))
-        .select(
-            "relation_id",
-            F.lit(stage_no).alias("stage_no"),
-            F.col("seq").cast("long").alias("seq"),
-            F.col("v.url").alias("url"),
-            F.col("v.message").alias("message"),
-        )
-    )
-
-
-def validate_re_tags(relations: DataFrame) -> DataFrame:
-    """T3 — route-relation tag requirements (route_relation.go:108-125).
+def re_tag_verdicts(tags: Column, url: Column) -> Column:
+    """T3 — stage-1 verdict array of the route-relation tag
+    requirements (route_relation.go:108-125).
 
     Check order is fixed (missing from/to/name/operator/ref, then
     type=route, then public_transport:version=2); the reference
     iterates a Go map for the two value checks (random order) so any
     fixed order is conformant — verdict sort keys make ours stable.
     """
-    tags = F.col("tags")
-    url = F.format_string(
-        "https://www.openstreetmap.org/relation/%d", F.col("relation_id")
-    )
     checks = missing_tag_checks(tags, url, RE_REQUIRED_TAGS)
     checks.append(tag_value_check(tags, url, "type", "route"))
     checks.append(tag_value_check(tags, url, "public_transport:version", "2"))
-    return explode_verdict_array(relations, checks, STAGE_TAGS)
+    return number_checks(STAGE_TAGS, checks)

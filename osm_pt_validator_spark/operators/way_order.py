@@ -31,11 +31,15 @@ from __future__ import annotations
 from collections.abc import Iterable, Sequence
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from osm_pt_validator_spark.functions.elements import is_stop_role, oneway_tag
+from osm_pt_validator_spark.functions.elements import (
+    element_url_str,
+    is_stop_role,
+    oneway_tag,
+)
 from osm_pt_validator_spark.schemas import (
     STAGE_ONEWAY,
     STAGE_STOP_ORDER,
@@ -52,14 +56,6 @@ MSG_BAD_ORDER = "ways are incorrectly ordered"
 MSG_ONEWAY = "way with oneway tag is traversed in wrong direction"
 MSG_STOP_NOT_ON_ROUTE = "stop is not on route"
 MSG_STOP_BAD_ORDER = "stop is incorrectly ordered"
-
-
-def _way_url(way_id: int) -> str:
-    return f"https://www.openstreetmap.org/way/{way_id}"
-
-
-def _node_url(node_id: int) -> str:
-    return f"https://www.openstreetmap.org/node/{node_id}"
 
 
 # ---------------------------------------------------------------------------
@@ -116,7 +112,7 @@ def run_way_order(
                 matches += 1
 
         if matches == 0:
-            verdicts.append((_way_url(way_id), MSG_BAD_ORDER))
+            verdicts.append((element_url_str("way", way_id), MSG_BAD_ORDER))
             allowed = set(nodes)  # reset frontier to this way
             has_gap = True
             way_dir = ANY  # stays at its init value in the reference
@@ -135,7 +131,7 @@ def run_way_order(
 
     for way_id, direction, nodes, ow in directs:
         if not _check_oneway(ow, direction, way_id in ignore_ids):
-            verdicts.append((_way_url(way_id), MSG_ONEWAY))
+            verdicts.append((element_url_str("way", way_id), MSG_ONEWAY))
 
     return verdicts, [(d[0], d[1], d[2]) for d in directs], False
 
@@ -215,11 +211,11 @@ def run_stop_order(
     for stop in stops:
         indices = stop_positions[stop]
         if not indices:
-            verdicts.append((_node_url(stop), MSG_STOP_NOT_ON_ROUTE))
+            verdicts.append((element_url_str("node", stop), MSG_STOP_NOT_ON_ROUTE))
             continue
         greater = [i for i in indices if i > last_index]
         if not greater:
-            verdicts.append((_node_url(stop), MSG_STOP_BAD_ORDER))
+            verdicts.append((element_url_str("node", stop), MSG_STOP_BAD_ORDER))
             continue
         last_index = greater[0]
     return verdicts
@@ -440,8 +436,3 @@ def cheap_gap_prefilter(members: DataFrame, ways: DataFrame) -> DataFrame:
         .groupBy("relation_id")
         .agg(F.max("maybe_gap").alias("maybe_gap"))
     )
-
-
-def oneway_tag_col(tags: Column) -> Column:
-    """Re-export for callers composing the detail frame themselves."""
-    return oneway_tag(tags)

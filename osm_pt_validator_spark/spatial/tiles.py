@@ -8,9 +8,12 @@ this scale linearly, and the output is tiny (bounded by 4^z).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_pt_validator_spark.functions.elements import OSM_URL
 from osm_pt_validator_spark.functions.geo import tile_x, tile_y
 
 
@@ -76,14 +79,12 @@ def verdict_failure_heatmap(
     coordinates embedded in their verdict URLs.
 
     Verdict messages carry the canonical element URL
-    (https://www.openstreetmap.org/node/<id>); node-shaped URLs are
+    (``elements.element_url``); node-shaped URLs are
     parsed back to ids, joined to the nodes dim (broadcast when small),
     and tiled. Way-shaped verdicts have no point geometry and are
     excluded (corridor-level rollups use PIP, spatial/pip.py).
     """
-    node_id = F.regexp_extract(
-        F.col("url"), r"https://www\.openstreetmap\.org/node/(\d+)", 1
-    )
+    node_id = F.regexp_extract(F.col("url"), re.escape(OSM_URL) + r"node/(\d+)", 1)
     located = (
         verdicts.filter(node_id != "")
         .withColumn("node_id", node_id.cast("long"))

@@ -428,6 +428,66 @@ def test_dsir_and_bigram_lm_empty_target(spark):
     assert s == {0: 2}
 
 
+def test_dsir_weights_disjoint_target_two_engines(spark):
+    """A target sharing no gram bucket with the corpus still counts its
+    true size in the target total (the raw<-target LEFT join used to
+    see 0 there): Spark matches a DuckDB replay with separate docs and
+    target tables."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from osm_pt_validator_spark.functions.hashing import md5_i64_sql
+    from osm_pt_validator_spark.operators.curation import dsir_weights
+
+    B = 4096
+    doc_rows = [(0, "alpha beta gamma"), (1, "beta delta"), (2, "")]
+    tgt_rows = [(100, "omega psi"), (101, "psi chi")]
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(doc_rows, schema)
+    target = spark.createDataFrame(tgt_rows, schema)
+    got = sorted(tuple(r) for r in dsir_weights(docs, target, buckets=B).collect())
+
+    con = duckdb.connect()
+    for name, rows in (("documents", doc_rows), ("target", tgt_rows)):
+        con.execute(f"CREATE TABLE {name} (doc_id BIGINT, text VARCHAR)")
+        con.executemany(f"INSERT INTO {name} VALUES (?, ?)", rows)
+    toks = entry._SQL_TOKENS.format(t="text")
+    ctes = f"""
+    WITH d AS (SELECT 'raw' AS side, doc_id, {toks} AS toks FROM documents
+               UNION ALL SELECT 'tgt', doc_id, {toks} FROM target),
+    g AS (
+      SELECT side, doc_id, t.g AS gram FROM d,
+        UNNEST(list_concat(
+          toks,
+          list_transform(range(1, len(toks)),
+                         i -> toks[i] || ' ' || toks[i + 1]))) AS t(g)),
+    b AS (SELECT side, doc_id, ({md5_i64_sql("gram", "dsir")}) % {B} AS bucket FROM g),
+    dc AS (SELECT doc_id, bucket, COUNT(*) AS c FROM b WHERE side = 'raw' GROUP BY 1, 2),
+    rh AS (SELECT bucket, SUM(c) AS r FROM dc GROUP BY 1),
+    th AS (SELECT bucket, COUNT(*) AS t FROM b WHERE side = 'tgt' GROUP BY 1),
+    tot AS (SELECT (SELECT SUM(r) FROM rh) AS rn, (SELECT SUM(t) FROM th) AS tn),
+    ratio AS (
+      SELECT rh.bucket,
+        CAST(round((ln((COALESCE(th.t, 0) + 1.0) / (tot.tn + {B}))
+                  - ln((rh.r + 1.0) / (tot.rn + {B}))) * 1e6) AS BIGINT) AS lr_micro
+      FROM rh LEFT JOIN th ON rh.bucket = th.bucket, tot)
+    """
+    shared = con.execute(
+        ctes + "SELECT COUNT(*) FROM (SELECT bucket FROM rh INTERSECT SELECT bucket FROM th)"
+    ).fetchone()[0]
+    assert shared == 0  # the target really is disjoint from the corpus
+    want = sorted(
+        tuple(r)
+        for r in con.execute(
+            ctes + """SELECT dc.doc_id, CAST(SUM(dc.c * ratio.lr_micro) AS BIGINT),
+              CAST(SUM(dc.c) AS BIGINT)
+            FROM dc JOIN ratio ON dc.bucket = ratio.bucket GROUP BY 1"""
+        ).fetchall()
+    )
+    assert got == want
+    assert [n for _, _, n in got] == [5, 3]  # empty-text doc absent
+
+
 def test_curation_funnel_empty_corpus(spark):
     from osm_pt_validator_spark.operators.curation import curation_funnel
 

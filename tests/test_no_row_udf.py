@@ -49,3 +49,17 @@ def test_no_collect_in_operators():
                 if re.search(r"\.collect\(\)|\.toPandas\(\)", line):
                     offenders.append(f"{py.name}:{i}: {line.strip()}")
     assert not offenders, offenders
+
+
+def test_one_module_knows_the_osm_url_format():
+    """Element URLs are built by functions/elements.py only
+    (element_url, relation_url, element_url_str); a second spelling of
+    the URL format elsewhere in the engine could drift from it."""
+    offenders = []
+    for py in PKG.rglob("*.py"):
+        if py.relative_to(PKG).as_posix() == "functions/elements.py":
+            continue
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            if "https://www.openstreetmap.org/" in line:
+                offenders.append(f"{py.name}:{i}: {line.strip()}")
+    assert not offenders, offenders

@@ -375,7 +375,7 @@ def test_nested_route_master_member_validated_as_route(spark, dims):
     verdicts, _ = validate_all(
         rels, nodes, ways, ValidationConfig(minimum_route_variants=2)
     )
-    from osm_pt_validator_spark.operators.pipeline import MSG_PTV2
+    from osm_pt_validator_spark.operators.set_stages import MSG_PTV2
 
     # outer master: only its own master validation (1 variant < 2)
     assert [m for _, m in sorted_verdicts(verdicts, 9720)] == [

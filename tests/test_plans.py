@@ -107,11 +107,8 @@ def test_salted_join_is_equi_not_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_set_based_validators_whole_stage_codegen(spark):
-    """The fused set-based verdict pass (tags/member-order/node-count)
-    is pure column algebra — its plan must contain WholeStageCodegen
-    and no Python evals (BatchEvalPython/ArrowEvalPython)."""
-    from osm_pt_validator_spark.config import ValidationConfig
+@pytest.fixture(scope="module")
+def route_relations(spark):
     from osm_pt_validator_spark.fixtures import (
         relation_row,
         relations_df,
@@ -119,16 +116,37 @@ def test_set_based_validators_whole_stage_codegen(spark):
         stop_members,
         way_members,
     )
-    from osm_pt_validator_spark.operators.set_stages import set_based_verdicts
 
-    rels = relations_df(
+    return relations_df(
         spark,
         [relation_row(1, stop_members(100, 102) + way_members(1, 2), route_tags())],
     )
-    plan = plan_of(set_based_verdicts(rels, ValidationConfig()))
+
+
+def test_set_based_validators_whole_stage_codegen(route_relations):
+    """The fused set-based verdict pass (tags/member-order/node-count)
+    is pure column algebra — its plan must contain WholeStageCodegen
+    and no Python evals (BatchEvalPython/ArrowEvalPython)."""
+    from osm_pt_validator_spark.config import ValidationConfig
+    from osm_pt_validator_spark.operators.set_stages import set_based_verdicts
+
+    plan = plan_of(set_based_verdicts(route_relations, ValidationConfig()))
     # formatted explain marks codegen'd operators with a leading '*'
     assert "* Project" in plan or "* Scan" in plan, plan
     assert "EvalPython" not in plan, plan
+
+
+def test_route_masters_single_pass(route_relations):
+    """validate_route_masters builds its per-member and tail verdicts
+    in one verdict array: one scan of its input, no Union of branches."""
+    import re
+
+    from osm_pt_validator_spark.operators.route_master import validate_route_masters
+
+    plan = plan_of(validate_route_masters(route_relations, 2))
+    scans = re.findall(r"^\(\d+\) \S*Scan", plan, re.M)
+    assert len(scans) == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_knn_probe_side_broadcasts_ring_dim(spark):

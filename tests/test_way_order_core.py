@@ -11,7 +11,6 @@ from osm_pt_validator_spark.fixtures import (
     WAY_ORDER_CASES,
 )
 from osm_pt_validator_spark.operators.way_order import (
-    oneway_tag_col,  # noqa: F401 - import check
     run_stop_order,
     run_way_order,
 )
