@@ -74,6 +74,14 @@ def _sql_cell(lat: str, lon: str, res: int) -> str:
     return f"(({i} << 32) | {j})"
 
 
+def _sql_floor_div(x: str, d) -> str:
+    """FLOOR division for any sign of `x` (d > 0), as Spark's
+    (x - pmod(x, d)) div d and its window starts compute it: DuckDB's
+    bare `//` truncates toward zero (-7 // 2 = -3), so subtract the
+    non-negative mod first to make the numerator exactly divisible."""
+    return f"({x} - (({x} % {d}) + {d}) % {d}) // {d}"
+
+
 def _sql_tile_x(lon: str, z: int) -> str:
     n = 1 << z
     return f"GREATEST(0, LEAST({n - 1}, CAST(floor((({lon}) + 180.0) / 360.0 * {n}) AS BIGINT)))"
@@ -776,14 +784,10 @@ kk AS (SELECT cell, n_present, sum_val, sum_val * 100 AS num,
        - CASE WHEN (cell & 4294967295) = 255 THEN 1 ELSE 0 END) AS k
   FROM a)
 SELECT cell, n_present, sum_val,
-  (num - ((num % k) + k) % k) // k AS mean_scaled
+  {_sql_floor_div("num", "k")} AS mean_scaled
 FROM kk
 """
-# mean_scaled replays focal_mean's FLOOR division exactly for any sign:
-# DuckDB's bare `//` truncates toward zero (-7 // 2 = -3), so the
-# non-negative-mod adjustment makes the numerator exactly divisible
-# first — identical to the Spark (__num - pmod(__num, __k)) div __k
-# spelling (tiles.py).
+# mean_scaled replays focal_mean's FLOOR division (tiles.py) for any sign.
 
 
 ZONE_POLYS = [
@@ -3128,7 +3132,8 @@ def _sql_streaming_heatmap_replay() -> str:
     lat = "(user_id % 1700) / 10.0 - 85.0"
     lon = "(event_id % 3600) / 10.0 - 180.0"
     return f"""
-SELECT CAST(epoch_us(ts) // 21600000000 * 21600 AS BIGINT) AS window_epoch,
+SELECT CAST({_sql_floor_div("epoch_us(ts)", 21600000000)} * 21600 AS BIGINT)
+    AS window_epoch,
   {_sql_tile_x(lon, 7)} AS tile_x,
   {_sql_tile_y(lat, 7)} AS tile_y,
   CAST(COUNT(*) AS BIGINT) AS n
@@ -3167,7 +3172,10 @@ def _sql_streaming_sessions_replay() -> str:
     # timestamps always share a session, and pre-grouping them makes
     # the cumulative break-sum's ORDER BY us tie-free (row-level lag
     # would order tied rows arbitrarily and could split a boundary
-    # pair nondeterministically)
+    # pair nondeterministically). The epoch seconds TRUNCATE toward
+    # zero on purpose, unlike the window starts: Spark's unix_timestamp
+    # of a timestamp is micros / 10^6 in Java long division, so a
+    # pre-1970 sub-second event maps to the second nearer the epoch.
     return """
 WITH e AS (SELECT user_id, epoch_us(ts) AS us, COUNT(*) AS cnt
            FROM events GROUP BY 1, 2),

@@ -89,12 +89,14 @@ def main(argv: list[str] | None = None) -> int:
         work_sets.append((DEFAULT_CONFIG, relations))
 
     def _validate():
-        # validate_all fans each work set into several branches (routes /
-        # masters / unknown / master-member join) — persist the FILTERED
-        # subset so it is computed once, not once per branch. Persisting
-        # the raw relations table instead would cache the whole table on
-        # a --relation-id run AND put a cache barrier in front of the
-        # parquet scan, blocking predicate pushdown of the work filter.
+        # validate_all reads each work set in several branches (the route
+        # set's two disjoint halves, masters, unknown, the gone path),
+        # and the route set feeds every validator stage — persist the
+        # FILTERED subset so it is computed once, not once per branch.
+        # Persisting the raw relations
+        # table instead would cache the whole table on a --relation-id
+        # run AND put a cache barrier in front of the parquet scan,
+        # blocking predicate pushdown of the work filter.
         # gone_handled: a work-list id that is missing AND a member of a
         # present route master would otherwise get "relation no longer
         # exists" twice — once from the jobs-level gone set above and

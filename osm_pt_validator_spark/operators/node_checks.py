@@ -102,11 +102,12 @@ def _stop_checks(tags: Column, url: Column) -> list[Column]:
 def validate_relation_nodes(
     members: DataFrame, nodes: DataFrame, naptan_platform_tags: bool
 ) -> DataFrame:
-    """Stage-3 verdicts for relations whose node members all resolved.
+    """Stage-3 verdicts for the node members that resolved.
 
     members: exploded (relation_id, member_idx, type, ref, role).
-    Relations with missing nodes must be excluded by the caller (their
-    verdicts are discarded by the reference).
+    A relation with a missing node keeps its other nodes' verdicts here;
+    the caller must discard them (the reference does), as the pipeline's
+    abort filter does.
     """
     j = _checked_node_members(members, nodes).filter(F.col("node_id").isNotNull())
     url = element_url(F.lit("node"), "ref")

@@ -16,9 +16,11 @@ Stage order and gating (all load-bearing for verdict parity):
 
 Scale notes: stages 0-2 and 7 are pure projections over the relations
 table (no shuffle). Stage 3 is one hash join against the nodes dim.
-Stages 4-6 are one shuffle on relation_id + one Arrow hop. Verdict
-order inside a relation is reconstructed by sorting on
-(stage_no, seq) — deterministic across any partitioning.
+Stages 4-6 are one shuffle on relation_id + one Arrow hop. Each gating
+decision is made once: the route set is one disjoint union (no dedup
+shuffle), and the stage-3 abort is one broadcast filter over every
+stage's output. Verdict order inside a relation is reconstructed by
+sorting on (stage_no, seq) — deterministic across any partitioning.
 """
 
 from __future__ import annotations
@@ -45,7 +47,7 @@ from osm_pt_validator_spark.operators.way_order import (
     STAGE_ENGINE_ERROR,
     validate_way_and_stop_order,
 )
-from osm_pt_validator_spark.schemas import STAGE_NODE_COUNT
+from osm_pt_validator_spark.schemas import STAGE_MEMBER_ORDER, STAGE_PTV2
 
 
 def explode_members(relations: DataFrame) -> DataFrame:
@@ -79,40 +81,38 @@ def validate_route_relations(
     # stages 0 + 1 + 2 + 7 fused: ONE projection pass over relations
     # (separate per-stage branches would re-scan the table per stage)
     vset = set_based_verdicts(relations, config)
-
-    ptv2_ok = relations.filter(is_ptv2(F.col("tags")))
-    members = explode_members(ptv2_ok)
-
-    # abort set: relations with unresolvable node members skip stages
-    # 3-7 (route_relation.go:29-33) — stages 0-2 survive, so only the
-    # fused pass's stage-7 rows need the exclusion. The abort set is an
-    # ERROR set — tiny by nature at any scale — so broadcast it
-    # explicitly: without the hint its size is statically unknowable
-    # (derived data) and the anti-joins degrade to sort-merge, sorting
-    # the full members stream twice for a near-empty exclusion list.
-    node_errors = missing_node_errors(members, nodes)
-    aborted = F.broadcast(node_errors.select("relation_id").distinct())
-    live_members = members.join(aborted, "relation_id", "left_anti")
-
-    vset = (
-        vset.join(aborted.withColumn("__ab", F.lit(True)), "relation_id", "left")
-        .filter((F.col("stage_no") != STAGE_NODE_COUNT) | F.col("__ab").isNull())
-        .drop("__ab")
-    )
-
-    v3 = validate_relation_nodes(live_members, nodes, config.naptan_platform_tags)
-
+    members = explode_members(relations.filter(is_ptv2(F.col("tags"))))
+    v3 = validate_relation_nodes(members, nodes, config.naptan_platform_tags)
     # stages 4-6 (+ way-load engine errors on stage_no = -1)
     v456 = validate_way_and_stop_order(
-        live_members, ways, config.ignore_traversal_direction_ways
+        members, ways, config.ignore_traversal_direction_ways
     )
-    way_errors = v456.filter(F.col("stage_no") == STAGE_ENGINE_ERROR).select(
-        "relation_id", "message"
-    )
-    v456 = v456.filter(F.col("stage_no") != STAGE_ENGINE_ERROR)
 
-    verdicts = vset.unionByName(v3).unionByName(v456)
-    engine_errors = node_errors.unionByName(way_errors)
+    # abort: a node member that fails to load discards stages 3-7 of its
+    # relation, way loads included (route_relation.go:29-33), so only
+    # stages 0-2 survive. The abort set is an ERROR set — tiny by nature
+    # at any scale — so broadcast it explicitly: its size is statically
+    # unknowable (derived data) and would otherwise plan a sort-merge
+    # join over every verdict for a near-empty list.
+    node_errors = missing_node_errors(members, nodes)
+    aborted = F.broadcast(
+        node_errors.select("relation_id").distinct().withColumn("__ab", F.lit(True))
+    )
+    kept = (
+        vset.unionByName(v3)
+        .unionByName(v456)
+        .join(aborted, "relation_id", "left")
+        .filter(
+            F.col("__ab").isNull()
+            | F.col("stage_no").between(STAGE_PTV2, STAGE_MEMBER_ORDER)
+        )
+        .drop("__ab")
+    )
+    is_error = F.col("stage_no") == STAGE_ENGINE_ERROR
+    verdicts = kept.filter(~is_error)
+    engine_errors = node_errors.unionByName(
+        kept.filter(is_error).select("relation_id", "message")
+    )
     return verdicts, engine_errors
 
 
@@ -163,7 +163,7 @@ def validate_all(
     the work list and a master member gets ONE verdict, not two.
     """
     rel_type = F.col("tags").getItem("type")
-    routes = relations.filter(rel_type == "route")
+    is_route = F.coalesce(rel_type == "route", F.lit(False))
     masters = relations.filter(rel_type == "route_master")
     unknown = relations.filter(rel_type.isNull() | ~rel_type.isin("route", "route_master"))
 
@@ -177,12 +177,16 @@ def validate_all(
     gone = missing_relation_verdicts(work, relations)
     if gone_handled is not None:
         gone = gone.join(F.broadcast(gone_handled), "relation_id", "left_anti")
-    member_routes = relations.join(
-        F.broadcast(work.select("relation_id").distinct()), "relation_id", "left_semi"
+    # the route set as a disjoint union: every route, plus every OTHER
+    # relation a master lists (a nested master is validated as a route
+    # too). A master member that is also a route is in the first half
+    # only, so it is validated once where the reference would validate
+    # it twice (two SQS events) — no dedup shuffle needed.
+    all_routes = relations.filter(is_route).unionByName(
+        relations.filter(~is_route).join(
+            F.broadcast(work.select("relation_id")), "relation_id", "left_semi"
+        )
     )
-    # a master member may also appear in the top-level work list; the
-    # reference would validate it twice (two SQS events) — dedup here.
-    all_routes = routes.unionByName(member_routes).dropDuplicates(["relation_id"])
 
     route_verdicts, engine_errors = validate_route_relations(
         all_routes, nodes, ways, config

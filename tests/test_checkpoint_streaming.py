@@ -540,3 +540,52 @@ def test_sessions_replay_oracle_is_tie_proof(spark):
             (2, 3, e0, e0 + 300),
         ]
     )
+
+
+def test_replay_oracles_floor_pre_1970_sub_second(spark, tmp_path):
+    """Both streaming-replay oracles round pre-1970 sub-second epochs
+    the way Spark does. Spark FLOORS window starts, so a pre-1970 event
+    lands in the window before the epoch, where DuckDB's bare `//`
+    (truncating) would put it at the epoch. Spark's unix_timestamp
+    TRUNCATES toward zero, and the sessions oracle must too."""
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    import __spark_entry__ as entry
+    from oracle_harness import TABLES, compare_query
+
+    epoch = dt.datetime(1970, 1, 1)
+    offsets = [
+        dt.timedelta(microseconds=-500_000),
+        dt.timedelta(hours=-6, microseconds=250_000),
+        dt.timedelta(hours=-6, microseconds=-250_000),
+        dt.timedelta(days=-400, microseconds=-1),
+        dt.timedelta(microseconds=750_000),
+    ]
+    ts = [epoch + o for o in offsets]
+    n = len(ts)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array([7, 7, 8, 9, 7], pa.int64()),
+            "event_type": ["view"] * n,
+            "value": [1.0] * n,
+            "props": ["{}"] * n,
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    for t in TABLES:
+        if t != "events":
+            pq.write_table(pa.table({"k": [1]}), str(tmp_path / f"{t}.parquet"))
+
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    for name in ("streaming_heatmap_replay", "streaming_sessions_replay"):
+        problems, rows = compare_query(
+            spark, str(tmp_path), name, queries[name], oracles[name]
+        )
+        assert not problems, (name, problems)
+        assert rows > 0, name

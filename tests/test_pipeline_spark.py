@@ -238,14 +238,26 @@ def test_node_checks_platform_and_stop(spark, dims):
 
 def test_missing_node_aborts_later_stages(spark, dims):
     nodes, ways = dims
-    ms = [member("node", 99999, "stop"), member("node", 100, "stop"), member("way", 1), member("way", 3)]
+    ms = [
+        member("node", 99999, "stop"),
+        member("node", 100, "stop"),
+        member("way", 1),
+        member("way", 3),
+        member("way", 77777),
+    ]
     rels = relations_df(spark, [relation_row(9501, ms, route_tags())])
-    verdicts, errors = validate_route_relations(rels, nodes, ways, ValidationConfig())
+    verdicts, errors = validate_route_relations(
+        rels, nodes, ways, ValidationConfig(minimum_node_members=5)
+    )
     errs = [(r.relation_id, r.message) for r in errors.collect()]
+    # the node-load error aborts before any way is loaded: no
+    # "failed to load way 77777" (stage -1 is filtered with stages 3-7)
     assert errs == [(9501, "failed to load node 99999")]
-    # stages 3+ discarded (route_relation.go:29-33); ways 1,3 have a gap
-    # that must NOT be reported. Stages 0-2 are clean for this relation,
-    # so it ends with zero verdicts, only the engine error.
+    # stages 3+ discarded (route_relation.go:29-33): ways 1,3 have a gap
+    # and 2 node members < 5 would fail stage 7, but neither may be
+    # reported. Stages 0-2 are clean for this relation, so it ends with
+    # zero verdicts, only the engine error.
+    assert verdicts.filter(F.col("stage_no") >= 3).count() == 0
     assert sorted_verdicts(verdicts, 9501) == []
 
 

@@ -149,6 +149,66 @@ def test_route_masters_single_pass(route_relations):
     assert "Union" not in plan, plan
 
 
+def test_validate_all_no_route_dedup_shuffle(spark, tmp_path):
+    """validate_all's route set is a disjoint union (every route, plus
+    every OTHER relation a route master lists): no dedup aggregate, so
+    no Sort/SortAggregate anywhere in the plan, and a route that is
+    also a master member is still validated exactly once. The tables
+    go through parquet so the planner sees their sizes, as in a job."""
+    import re
+
+    from osm_pt_validator_spark.config import ValidationConfig
+    from osm_pt_validator_spark.fixtures import (
+        member,
+        nodes_df,
+        relation_row,
+        relations_df,
+        route_tags,
+        stop_members,
+        way_members,
+        ways_df,
+    )
+    from osm_pt_validator_spark.operators.pipeline import (
+        validate_all,
+        validate_route_relations,
+    )
+
+    # relation 1 (ways 1, 3 leave a gap) is a route AND a master member
+    rels = relations_df(
+        spark,
+        [
+            relation_row(1, stop_members(100, 102) + way_members(1, 3), route_tags()),
+            relation_row(2, stop_members(102, 104) + way_members(3, 4), route_tags()),
+            relation_row(
+                9,
+                [member("relation", 1)],
+                {"type": "route_master", "name": "M", "ref": "M", "operator": "Op"},
+            ),
+        ],
+    )
+
+    def on_disk(name, df):
+        df.write.parquet(str(tmp_path / name))
+        return spark.read.parquet(str(tmp_path / name))
+
+    rels = on_disk("relations", rels)
+    nodes, ways = on_disk("nodes", nodes_df(spark)), on_disk("ways", ways_df(spark))
+    verdicts, _ = validate_all(rels, nodes, ways, ValidationConfig())
+    plan = plan_of(verdicts)
+    assert not re.search(r"^\(\d+\) Sort(Aggregate)?\b", plan, re.M), plan
+
+    def rows(vdf):
+        return sorted(
+            tuple(r) for r in vdf.filter(F.col("relation_id") == 1).collect()
+        )
+
+    once, _ = validate_route_relations(
+        rels.filter(F.col("relation_id") == 1), nodes, ways
+    )
+    assert rows(once), "the shared route must have verdicts to count"
+    assert rows(verdicts) == rows(once)
+
+
 def test_knn_probe_side_broadcasts_ring_dim(spark):
     """kNN: the exploded k-ring probe joins the stops dim; with a small
     dim the planner must pick broadcast (checked via explain), keeping
