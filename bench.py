@@ -15,7 +15,8 @@ Headline suite (the engine's scale-critical paths):
 
 Environment:
   SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[<n>] parallelism (default 32)
+  SPARK_GRAFT_CPUS    local[<n>] parallelism (default: the CPUs this
+                      process may run on)
 
 Scaling-efficiency evidence (BASELINE.md protocol): run twice —
 SPARK_GRAFT_CPUS=8 and =32 — on the same input; E = (T_8/T_32)/4.
@@ -205,12 +206,18 @@ def _build_knn(spark, sf_dir, k):
     from osm_pt_validator_spark.spatial.knn import knn_join
 
     c, s = _knn_dims(spark, sf_dir)
-    # res=14 (~0.011 deg ≈ 1.2 km lat cells): ring=1 must cover the
-    # k=2 neighbour distance, and the supplier lattice's worst-case
-    # 2nd-NN is ~0.7 km — a ~1.7× margin — while candidates drop ~3×
-    # vs the old res=13. scripts/knn_res_check.py proves res 13 and 14
-    # return IDENTICAL rows at sf0.1 for k=1 and k=2 (res=8 put the
-    # whole box in ONE cell — a full cross join through one partition).
+    # res=14: a cell is 0.01099 deg of latitude by 0.02197 deg of
+    # longitude, and ring=1 reaches at least one whole cell past the
+    # probe's cell on each axis. The largest k=2 neighbour distance of
+    # the sf0.1 dims is 770 m = 0.00693 deg lat and 0.01239 deg lon at
+    # ~56 N, a margin of 1.59x in latitude and 1.77x in longitude; k=1
+    # (763 m) gives 1.60x / 1.79x. (At sf0.01, with fewer suppliers, the
+    # k=2 margin is 0.97x lat / 1.09x lon.) Candidates drop ~3x vs
+    # res=13. scripts/knn_res_check.py checks res 13 and 14 against a
+    # brute-force cross join at k=1 and k=2 and prints these margins:
+    # both match at sf0.1 and sf0.01; res 15 (0.79x lat) is not covered
+    # and res 16 misses rows at sf0.1. (res=8 put the whole box in ONE
+    # cell — a full cross join through one partition.)
     # probe_partitions: the sf dims are single-row-group parquet, i.e.
     # one non-empty scan partition; spread the probe rows before the
     # ring explosion so candidate work uses every core.
@@ -293,8 +300,6 @@ PLAN_TARGETS = {
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
     from osm_pt_validator_spark.hostprobe import (
         cpu_times,
         parallel_probe,
@@ -302,8 +307,9 @@ def main():
         spin_probe,
         steal_pct,
     )
-    from osm_pt_validator_spark.session import ensure_py_files, get_spark
+    from osm_pt_validator_spark.session import default_cores, ensure_py_files, get_spark
 
+    cpus = default_cores()
     # host-window evidence, sampled BEFORE the JVM exists: the sandbox
     # host's deliverable CPU swings ~2x between minutes, and without
     # this a slow suite number is indistinguishable from a regression

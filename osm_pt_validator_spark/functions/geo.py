@@ -14,6 +14,10 @@ Cell scheme ("S2-style" equal-angle grid):
 Parent at coarser resolution dr levels up: ((i >> dr) << 32) | (j >> dr)
 k-ring: the (2k+1)^2 grid neighbourhood, clipped at the grid edge.
 
+This is the only module that knows the packed layout: every other
+operator packs with ``pack_cell``, unpacks with ``cell_to_ij`` and
+enumerates an (i, j) box with ``cells_in_box`` / ``cell_window``.
+
 At res=16 a cell is ~300 m of latitude — the right granularity for
 stop-mention joins; res is a parameter everywhere.
 """
@@ -30,10 +34,15 @@ DEFAULT_RES = 16
 EARTH_RADIUS_M = 6371000.0
 
 
+def _clamp(raw: Column, n: int) -> Column:
+    """Clamp a long index column to the grid [0, n - 1]."""
+    return F.greatest(F.lit(0).cast("long"), F.least(F.lit(n - 1).cast("long"), raw))
+
+
 def _clamped_idx(value: Column, offset: float, span: float, res: int) -> Column:
     n = 1 << res
     raw = F.floor((value + F.lit(offset)) / F.lit(span) * F.lit(n)).cast("long")
-    return F.greatest(F.lit(0).cast("long"), F.least(F.lit(n - 1).cast("long"), raw))
+    return _clamp(raw, n)
 
 
 def cell_i(lat: Column, res: int = DEFAULT_RES) -> Column:
@@ -44,9 +53,14 @@ def cell_j(lon: Column, res: int = DEFAULT_RES) -> Column:
     return _clamped_idx(lon, 180.0, 360.0, res)
 
 
+def pack_cell(i: Column, j: Column) -> Column:
+    """The packed cell id (i << 32) | j."""
+    return F.shiftleft(i, 32).bitwiseOR(j)
+
+
 def cell(lat: Column, lon: Column, res: int = DEFAULT_RES) -> Column:
     """G3: packed grid cell id (i << 32 | j)."""
-    return F.shiftleft(cell_i(lat, res), 32).bitwiseOR(cell_j(lon, res))
+    return pack_cell(cell_i(lat, res), cell_j(lon, res))
 
 
 def cell_to_ij(c: Column) -> tuple[Column, Column]:
@@ -57,32 +71,37 @@ def cell_parent(c: Column, dr: int) -> Column:
     """Coarsen a cell by dr resolution levels — the cell-prefix join key
     (G4)."""
     i, j = cell_to_ij(c)
-    return F.shiftleft(F.shiftright(i, dr), 32).bitwiseOR(F.shiftright(j, dr))
+    return pack_cell(F.shiftright(i, dr), F.shiftright(j, dr))
+
+
+def cells_in_box(i_lo: Column, i_hi: Column, j_lo: Column, j_hi: Column) -> Column:
+    """Array of the packed cells of the (i, j) box, bounds inclusive, in
+    row-major order (i outer, j inner). Pure array algebra — explode it
+    to get one row per cell."""
+    return F.flatten(
+        F.transform(
+            F.sequence(i_lo, i_hi),
+            lambda i: F.transform(F.sequence(j_lo, j_hi), lambda j: pack_cell(i, j)),
+        )
+    )
+
+
+def cell_window(i: Column, j: Column, ki, kj, res: int) -> Column:
+    """The (2ki+1) x (2kj+1) box around (i, j), clipped at the grid edge
+    — :func:`cells_in_box` between clamped bounds. ``ki``/``kj`` may be
+    ints or per-row columns."""
+    n = 1 << res
+    return cells_in_box(
+        _clamp(i - ki, n), _clamp(i + ki, n), _clamp(j - kj, n), _clamp(j + kj, n)
+    )
 
 
 def kring_cells(c: Column, k: int, res: int = DEFAULT_RES) -> Column:
-    """G7: array of the (2k+1)^2 neighbourhood cells, grid-clipped.
-
-    Pure array algebra (flatten of nested transforms over sequences) —
-    explode the result on the probe side of a kNN join.
-    """
-    n = 1 << res
+    """G7: array of the (2k+1)^2 neighbourhood cells, grid-clipped, in
+    row-major order (NULL for a NULL cell) — explode the result on the
+    probe side of a kNN join."""
     i, j = cell_to_ij(c)
-    di = F.sequence(F.lit(-k), F.lit(k))
-    pairs = F.flatten(
-        F.transform(
-            di,
-            lambda a: F.transform(
-                F.sequence(F.lit(-k), F.lit(k)),
-                lambda b: F.struct((i + a).alias("i"), (j + b).alias("j")),
-            ),
-        )
-    )
-    valid = F.filter(
-        pairs,
-        lambda p: (p["i"] >= 0) & (p["i"] < n) & (p["j"] >= 0) & (p["j"] < n),
-    )
-    return F.transform(valid, lambda p: F.shiftleft(p["i"], 32).bitwiseOR(p["j"]))
+    return F.when(c.isNotNull(), cell_window(i, j, k, k, res))
 
 
 def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
@@ -104,8 +123,7 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colum
 
 def tile_x(lon: Column, z: int) -> Column:
     n = 1 << z
-    raw = F.floor((lon + 180.0) / 360.0 * F.lit(n)).cast("long")
-    return F.greatest(F.lit(0).cast("long"), F.least(F.lit(n - 1).cast("long"), raw))
+    return _clamp(F.floor((lon + 180.0) / 360.0 * F.lit(n)).cast("long"), n)
 
 
 def tile_y(lat: Column, z: int) -> Column:
@@ -116,7 +134,7 @@ def tile_y(lat: Column, z: int) -> Column:
         / 2.0
         * F.lit(n)
     ).cast("long")
-    return F.greatest(F.lit(0).cast("long"), F.least(F.lit(n - 1).cast("long"), raw))
+    return _clamp(raw, n)
 
 
 # ---------------------------------------------------------------------------

@@ -58,7 +58,6 @@ def run_stage(
     root: str,
     stage: str,
     df_fn: Callable[[], DataFrame],
-    verbose: bool = False,
 ) -> DataFrame:
     """Compute-or-resume a stage.
 
@@ -87,8 +86,6 @@ def run_stage(
     }
     with open(os.path.join(root, f"{stage}__manifest.json"), "w") as f:
         json.dump(manifest, f)
-    if verbose:  # pragma: no cover
-        print(f"[stage {stage}] {manifest}")
     return out
 
 

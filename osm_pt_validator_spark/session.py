@@ -18,6 +18,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the CPUs this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "osm-pt-validator-spark",
     cores: int | None = None,
@@ -26,12 +32,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
+    ``cores`` defaults to :func:`default_cores`.
     On a real cluster this function is still usable: ``master`` is only
     forced when no master is configured.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         # one-ish shuffle partition per core locally; on a cluster this
         # would be ~2-3x total cores — callers override.

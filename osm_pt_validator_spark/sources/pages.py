@@ -47,16 +47,17 @@ _MENTION_RE = (
 )
 
 
+def _paragraph_text(html: pd.Series) -> pd.Series:
+    """The one G1 spelling: text = '\\n'.join of <p>…</p> bodies in
+    document order. The whole batch runs through pandas str ops (C
+    loops), never row-at-a-time Python."""
+    return html.str.decode("utf-8").str.findall(_P_RE).str.join("\n")
+
+
 @pandas_udf(T.StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
-    """G1: paragraph text extraction, byte-identical per url.
-
-    Contract: text = '\\n'.join of <p>…</p> bodies in document order.
-    The whole batch runs through pandas str ops (C loops), never
-    row-at-a-time Python.
-    """
-    s = html.str.decode("utf-8")
-    return s.str.findall(_P_RE).str.join("\n")
+    """G1: paragraph text extraction, byte-identical per url."""
+    return _paragraph_text(html)
 
 
 def with_extracted_text(pages: DataFrame) -> DataFrame:
@@ -79,8 +80,8 @@ def extract_mentions(pages: DataFrame, from_html: bool = False) -> DataFrame:
     scan — html pruned).
 
     G1+G2 fusion: with from_html the text extraction runs INSIDE this
-    mapInPandas with the exact G1 pandas expressions (byte-identical
-    output — tested vs extract_text_udf), instead of a separate
+    mapInPandas through the same ``_paragraph_text`` helper as
+    extract_text_udf (byte-identical by construction), instead of a separate
     pandas_udf stage. One Python hop instead of two: the big html
     column crosses the Arrow boundary once and the intermediate text
     never round-trips JVM->Python->JVM->Python.
@@ -93,12 +94,7 @@ def extract_mentions(pages: DataFrame, from_html: bool = False) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if from_html:
-                text = (
-                    pdf["html"].str.decode("utf-8").str.findall(_P_RE).str.join("\n")
-                )
-            else:
-                text = pdf["text"].fillna("")
+            text = _paragraph_text(pdf["html"]) if from_html else pdf["text"].fillna("")
             m = text.str.extractall(_MENTION_RE)
             if len(m) == 0:
                 continue

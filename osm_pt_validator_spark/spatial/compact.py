@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_pt_validator_spark.functions.geo import cell_parent
+from osm_pt_validator_spark.functions.geo import cell_parent, cell_to_ij, cells_in_box
 
 
 def compact_cells(
@@ -69,21 +69,12 @@ def uncompact_cells(
 ) -> DataFrame:
     """Inverse: expand a multi-resolution covering back to the uniform
     ``res`` cell set. Each (cell, r) row explodes into its 4^(res-r)
-    descendants via pure array algebra (sequence cross products) — the
-    exact preimage of :func:`compact_cells`."""
-    # variable-width shifts: the Python shiftleft() only takes literal
-    # bit counts, so the data-dependent (res - r) shifts go through SQL
-    dr = f"({res} - {res_col})"
-    side = F.expr(f"shiftleft(1L, {dr})")
-    base_i = F.expr(f"shiftleft(shiftright({cell_col}, 32), {dr})")
-    base_j = F.expr(f"shiftleft({cell_col} & 4294967295, {dr})")
-    children = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), side - 1),
-            lambda a: F.transform(
-                F.sequence(F.lit(0), side - 1),
-                lambda b: F.shiftleft(base_i + a, 32).bitwiseOR(base_j + b),
-            ),
-        )
-    )
+    descendants — the side x side box of ``geo.cells_in_box`` at the
+    cell's (i, j) scaled by side = 2^(res - r) — the exact preimage of
+    :func:`compact_cells`."""
+    # variable-width shift: the Python shiftleft() only takes literal
+    # bit counts, so the data-dependent (res - r) shift goes through SQL
+    side = F.expr(f"shiftleft(1L, {res} - {res_col})")
+    i, j = cell_to_ij(F.col(cell_col))
+    children = cells_in_box(i * side, (i + 1) * side - 1, j * side, (j + 1) * side - 1)
     return compacted.select(F.explode(children).alias("cell"))

@@ -31,7 +31,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from osm_pt_validator_spark.functions.geo import cell_i, cell_j, udeg
+from osm_pt_validator_spark.functions.geo import (
+    cell_i,
+    cell_j,
+    cell_to_ij,
+    cells_in_box,
+    udeg,
+)
 
 _UD = 1e6
 
@@ -55,19 +61,12 @@ def _cover_cells(
     i_hi = F.greatest(cell_i(qlat1, res), cell_i(qlat2, res))
     j_lo = F.least(cell_j(qlon1, res), cell_j(qlon2, res))
     j_hi = F.greatest(cell_j(qlon1, res), cell_j(qlon2, res))
-    return (
-        df.select(
-            "*",
-            q(lat1).alias("__y1"), q(lon1).alias("__x1"),
-            q(lat2).alias("__y2"), q(lon2).alias("__x2"),
-            F.explode(F.sequence(i_lo, i_hi)).alias("__i"),
-            i_lo.alias("__ilo"), j_lo.alias("__jlo"), j_hi.alias("__jhi"),
-        )
-        .select(
-            "*", F.explode(F.sequence(F.col("__jlo"), F.col("__jhi"))).alias("__j")
-        )
-        .withColumn("__cell", F.shiftleft(F.col("__i"), 32).bitwiseOR(F.col("__j")))
-        .drop("__i", "__j", "__jhi")
+    return df.select(
+        "*",
+        q(lat1).alias("__y1"), q(lon1).alias("__x1"),
+        q(lat2).alias("__y2"), q(lon2).alias("__x2"),
+        F.explode(cells_in_box(i_lo, i_hi, j_lo, j_hi)).alias("__cell"),
+        i_lo.alias("__ilo"), j_lo.alias("__jlo"),
     )
 
 
@@ -137,8 +136,7 @@ def segment_intersection_join(
         F.col("__ilo").alias("rilo"), F.col("__jlo").alias("rjlo"),
     )
     cand = la.join(rb, "__cell")
-    li = F.shiftright(F.col("__cell"), 32)
-    lj = F.col("__cell").bitwiseAND(F.lit(0xFFFFFFFF))
+    li, lj = cell_to_ij(F.col("__cell"))
     first_shared = (li == F.greatest(F.col("lilo"), F.col("rilo"))) & (
         lj == F.greatest(F.col("ljlo"), F.col("rjlo"))
     )

@@ -23,10 +23,15 @@ from osm_pt_validator_spark.functions.geo import (
     cell,
     cell_i,
     cell_j,
+    cell_window,
     haversine_m,
 )
 
 METERS_PER_DEG_LAT = EARTH_RADIUS_M * math.pi / 180.0
+#: seeded probe-side sample used to estimate hot keys
+_HOT_SAMPLE_FRACTION = 0.01
+#: cap on distance_join's per-row longitude ring (pathological rows)
+_MAX_LON_RING = 64
 
 
 def with_cell(df: DataFrame, lat: str = "lat", lon: str = "lon", res: int = DEFAULT_RES,
@@ -48,18 +53,13 @@ def broadcast_cell_join(
                   p["cell"] == F.col("b_cell"), "inner").drop("b_cell")
 
 
-def hot_keys(
-    probe: DataFrame,
-    key: str,
-    threshold: int,
-    sample_fraction: float = 0.01,
-) -> DataFrame:
+def hot_keys(probe: DataFrame, key: str, threshold: int) -> DataFrame:
     """Estimate keys whose probe-side frequency exceeds `threshold`
-    from a `sample_fraction` sample (seeded — deterministic). Returns a
-    single-column DF of hot key values, intended for broadcast."""
-    scaled = max(1.0, threshold * sample_fraction)
+    from a 1% sample (seeded — deterministic). Returns a single-column
+    DF of hot key values, intended for broadcast."""
+    scaled = max(1.0, threshold * _HOT_SAMPLE_FRACTION)
     return (
-        probe.sample(fraction=sample_fraction, seed=42)
+        probe.sample(fraction=_HOT_SAMPLE_FRACTION, seed=42)
         .groupBy(key)
         .count()
         .filter(F.col("count") >= scaled)
@@ -75,7 +75,6 @@ def salted_equi_join(
     hot: DataFrame | None = None,
     hot_threshold: int = 1_000_000,
     probe_salt_col: str | None = None,
-    shuffle_hash: bool = True,
 ) -> DataFrame:
     """Skew-safe inner equi-join on `key`.
 
@@ -88,16 +87,13 @@ def salted_equi_join(
     columns; pass `probe_salt_col` (e.g. 'url') for a stable identity
     column — required for reproducible lineage.
 
-    `shuffle_hash` (default) hints SHUFFLE_HASH on the build side.
-    NB the hint is resolved BEFORE size-based broadcast selection, so
-    it FORCES a shuffled hash join — it is never upgraded to broadcast,
-    and the probe side always shuffles. That is the right trade here
-    because salting exists precisely for probe sides too hot/large for
-    broadcast to matter and build slices that are per-partition small
-    by construction (hashing the build skips sort-merge's O(n log n)
-    sort of the huge probe). Pass shuffle_hash=False when the build
-    side is tiny (let the planner broadcast) or could be large per
-    partition (sort-merge spills safely).
+    The build side is hinted SHUFFLE_HASH. NB the hint is resolved
+    BEFORE size-based broadcast selection, so it FORCES a shuffled hash
+    join — it is never upgraded to broadcast, and the probe side always
+    shuffles. That is the right trade here because salting exists
+    precisely for probe sides too hot/large for broadcast to matter and
+    build slices that are per-partition small by construction (hashing
+    the build skips sort-merge's O(n log n) sort of the huge probe).
 
     NB when `hot` (or the default probe-frequency estimate) derives
     from `probe` and `probe` is itself an expensive pipeline (e.g.
@@ -136,9 +132,8 @@ def salted_equi_join(
         .drop("__is_hot")
         .withColumn("__salt", F.explode("__salts"))
         .drop("__salts")
+        .hint("SHUFFLE_HASH")
     )
-    if shuffle_hash:
-        b = b.hint("SHUFFLE_HASH")
     return p.join(b, [key, "__salt"], "inner").drop("__salt")
 
 
@@ -160,7 +155,6 @@ def distance_join(
     right_lat: str = "lat",
     right_lon: str = "lon",
     broadcast_right: bool = False,
-    max_lon_ring: int = 64,
 ) -> DataFrame:
     """All (left, right) pairs within ``max_dist_m`` meters (inclusive)
     — the radius join that kNN does not express (kNN bounds the COUNT
@@ -188,15 +182,14 @@ def distance_join(
     The per-row j-ring is also the skew story: equatorial rows fan out
     to 3 cells, arctic rows to more — paying the fan-out only where
     geometry demands it instead of sizing the whole grid for the worst
-    latitude. ``max_lon_ring`` caps pathological rows.
+    latitude. The ring is capped at 64 cells for pathological rows.
 
     Right-side columns whose names collide with left's are suffixed
     ``_r`` in the output. Output adds ``distance_m``.
     """
     if res is None:
         res = resolution_for_distance(max_dist_m)
-    n = 1 << res
-    cell_h_m = 180.0 / n * METERS_PER_DEG_LAT
+    cell_h_m = 180.0 / (1 << res) * METERS_PER_DEG_LAT
     ki = max(1, math.ceil(max_dist_m / cell_h_m))
     dlat_deg = max_dist_m / METERS_PER_DEG_LAT
 
@@ -204,25 +197,11 @@ def distance_join(
     worst_lat = F.least(F.abs(lat_c) + F.lit(dlat_deg), F.lit(85.0))
     cell_w_m = F.lit(2.0 * cell_h_m) * F.cos(F.radians(worst_lat))
     kj = F.least(
-        F.ceil(F.lit(float(max_dist_m)) / cell_w_m), F.lit(max_lon_ring)
+        F.ceil(F.lit(float(max_dist_m)) / cell_w_m), F.lit(_MAX_LON_RING)
     ).cast("int")
 
     i, j = cell_i(lat_c, res), cell_j(F.col(left_lon), res)
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(-ki), F.lit(ki)),
-            lambda a: F.transform(
-                F.sequence(-kj, kj),
-                lambda b: F.struct((i + a).alias("i"), (j + b).alias("j")),
-            ),
-        )
-    )
-    in_grid = F.filter(
-        pairs,
-        lambda p: (p["i"] >= 0) & (p["i"] < n) & (p["j"] >= 0) & (p["j"] < n),
-    )
-    cells = F.transform(in_grid, lambda p: F.shiftleft(p["i"], 32).bitwiseOR(p["j"]))
-    lf = left.withColumn("__cell", F.explode(cells))
+    lf = left.withColumn("__cell", F.explode(cell_window(i, j, ki, kj, res)))
 
     renames = {c: (c + "_r" if c in left.columns else c) for c in right.columns}
     rt = right.select([F.col(c).alias(renames[c]) for c in right.columns])

@@ -28,24 +28,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_pt_validator_spark.functions.geo import DEFAULT_RES, cell_i, cell_j
+from osm_pt_validator_spark.functions.geo import (
+    DEFAULT_RES,
+    cell_i,
+    cell_j,
+    cells_in_box,
+)
 
 
 def polygon_cell_cover(polygons: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(polygon_id, cell) for every grid cell intersecting the
     polygon's bbox — coarse but safe cover, pure column algebra."""
-    i_min = cell_i(F.array_min("ys"), res)
-    i_max = cell_i(F.array_max("ys"), res)
-    j_min = cell_j(F.array_min("xs"), res)
-    j_max = cell_j(F.array_max("xs"), res)
-    cells = F.flatten(
-        F.transform(
-            F.sequence(i_min, i_max),
-            lambda i: F.transform(
-                F.sequence(j_min, j_max),
-                lambda j: F.shiftleft(i, 32).bitwiseOR(j),
-            ),
-        )
+    cells = cells_in_box(
+        cell_i(F.array_min("ys"), res), cell_i(F.array_max("ys"), res),
+        cell_j(F.array_min("xs"), res), cell_j(F.array_max("xs"), res),
     )
     return polygons.select("polygon_id", F.explode(cells).alias("cell"))
 

@@ -11,10 +11,10 @@ polyfill: a cell belongs to the polygon iff its CENTER is inside
 partition the grid with no double-coverage.
 
 100 TB shape: pure map-side column algebra — bbox index ranges from
-``array_min``/``array_max``, candidate cells from two chained
-``explode(sequence(...))`` generators (bounded by bbox area / cell
-area, not by data volume), crossing parity as an integer
-``F.aggregate`` fold over the vertex arrays. ZERO shuffles, zero
+``array_min``/``array_max``, candidate cells from one explode of
+``geo.cells_in_box`` (bounded by bbox area / cell area, not by data
+volume), crossing parity as an integer ``F.aggregate`` fold over the
+vertex arrays. ZERO shuffles, zero
 Python rows: the whole operator is one whole-stage-codegen projection
 per polygon. For very large polygons at fine resolution, compose with
 :func:`osm_pt_validator_spark.spatial.compact.compact_cells`: polyfill
@@ -26,7 +26,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from osm_pt_validator_spark.functions.geo import DEFAULT_RES, cell_i, cell_j
+from osm_pt_validator_spark.functions.geo import (
+    DEFAULT_RES,
+    cell_i,
+    cell_j,
+    cell_to_ij,
+    cells_in_box,
+)
 
 
 def _crossing_parity(px: Column, py: Column, xs: Column, ys: Column) -> Column:
@@ -72,36 +78,22 @@ def cell_polyfill(
     (center rule — same contract as H3 polyfill).
     """
     n = 1 << res
-    i_min = cell_i(F.array_min(F.col(ys_col)), res)
-    i_max = cell_i(F.array_max(F.col(ys_col)), res)
-    j_min = cell_j(F.array_min(F.col(xs_col)), res)
-    j_max = cell_j(F.array_max(F.col(xs_col)), res)
-    cands = (
-        polygons.select(
-            F.col(polygon_id), F.col(xs_col), F.col(ys_col),
-            F.explode(F.sequence(i_min, i_max)).alias("__i"),
-            j_min.alias("__jmin"), j_max.alias("__jmax"),
-        )
-        .select(
-            F.col(polygon_id), F.col(xs_col), F.col(ys_col), "__i",
-            F.explode(F.sequence(F.col("__jmin"), F.col("__jmax"))).alias("__j"),
-        )
+    xs, ys = F.col(xs_col), F.col(ys_col)
+    cands = polygons.select(
+        F.col(polygon_id), xs, ys,
+        F.explode(
+            cells_in_box(
+                cell_i(F.array_min(ys), res), cell_i(F.array_max(ys), res),
+                cell_j(F.array_min(xs), res), cell_j(F.array_max(xs), res),
+            )
+        ).alias("cell"),
     )
+    i, j = cell_to_ij(F.col("cell"))
     # center coordinates: EXACTLY this operation order in the oracle SQL
-    py = (F.col("__i").cast("double") + F.lit(0.5)) / F.lit(float(n)) * F.lit(
-        180.0
-    ) - F.lit(90.0)
-    px = (F.col("__j").cast("double") + F.lit(0.5)) / F.lit(float(n)) * F.lit(
-        360.0
-    ) - F.lit(180.0)
-    parity = _crossing_parity(px, py, F.col(xs_col), F.col(ys_col))
-    return (
-        cands.filter(parity % 2 == 1)
-        .select(
-            F.col(polygon_id),
-            F.shiftleft(F.col("__i"), 32).bitwiseOR(F.col("__j")).alias("cell"),
-        )
-    )
+    py = (i.cast("double") + F.lit(0.5)) / F.lit(float(n)) * F.lit(180.0) - F.lit(90.0)
+    px = (j.cast("double") + F.lit(0.5)) / F.lit(float(n)) * F.lit(360.0) - F.lit(180.0)
+    parity = _crossing_parity(px, py, xs, ys)
+    return cands.filter(parity % 2 == 1).select(F.col(polygon_id), "cell")
 
 
 def areal_interpolation(

@@ -150,10 +150,10 @@ def focal_mean(
     (kring_cells, grid-clipped); one map-side-combining groupBy sums
     the contributions per target cell. Absent cells count as zero, and
     the divisor is the target's CLIPPED kernel size (6 on an edge, 4 in
-    a corner), derived arithmetically from the target's (i, j) — so
-    edge cells are true means, not zero-padded underestimates. Output
-    rows cover exactly the cells with at least one present neighbor
-    (the support of the convolution).
+    a corner), the size of its own clipped 3x3 ring — so edge cells are
+    true means, not zero-padded underestimates. Output rows cover
+    exactly the cells with at least one present neighbor (the support
+    of the convolution).
 
     Integer contract: mean_x{scale} = sum * scale div kernel_size
     (truncating) — exact, engine-identical.
@@ -162,7 +162,6 @@ def focal_mean(
     """
     from osm_pt_validator_spark.functions.geo import kring_cells
 
-    n = 1 << res
     scattered = cells.select(
         F.explode(kring_cells(F.col(cell_col), 1, res)).alias("cell"),
         F.col(value_col).alias("__v"),
@@ -171,11 +170,7 @@ def focal_mean(
         F.count(F.lit(1)).alias("n_present"),
         F.sum("__v").alias("sum_val"),
     )
-    i = F.shiftright(F.col("cell"), 32)
-    j = F.col("cell").bitwiseAND(F.lit(0xFFFFFFFF))
-    ki = F.lit(3) - (i == 0).cast("int") - (i == n - 1).cast("int")
-    kj = F.lit(3) - (j == 0).cast("int") - (j == n - 1).cast("int")
-    ksize = (ki * kj).cast("long")
+    ksize = F.size(kring_cells(F.col("cell"), 1, res)).cast("long")
     # FLOOR division in pure int64: pmod is non-negative, the adjusted
     # numerator is exactly divisible, and `div` never leaves the
     # integer domain — no 2^53 float-precision ceiling. NOTE: DuckDB's

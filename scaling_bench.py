@@ -53,8 +53,16 @@ describes, where per-job planning cost is amortized to nothing.
 Warmup is a 1/8-size pass (python-worker imports, JIT, shuffle
 buffers) instead of a full-size first iteration.
 
+Each leg is pinned to CPUs [0, cpus). The run exits with an error when
+the 4N leg's CPUs are not all usable by this process (Linux would
+accept the mask and silently run the "4N" leg on fewer cores). The
+in-leg sidecar probe runs on the two highest usable CPUs outside
+[0, 4N); when fewer than two are free the legs run without it and the
+JSON ``basis`` says so.
+
 Usage:
     python scaling_bench.py                # primary pair (2, 8), 3 pairs
+    SPARK_GRAFT_SCALE_PAIR=1,4 python scaling_bench.py   # 4-CPU host
     SPARK_GRAFT_SCALE_PAIR=8,32 python scaling_bench.py
     SPARK_GRAFT_SCALE_TRIALS=4 python scaling_bench.py
 
@@ -77,6 +85,23 @@ N_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SCALE_PARTITIONS", 64))
 #: in-leg gate window: mean of this many sidecar samples (~50 s wall at
 #: the 2s-sample + 3s-wait cadence); spread is over these window means
 PROBE_WINDOW = int(os.environ.get("SPARK_GRAFT_SCALE_PROBE_WINDOW", 10))
+
+
+def sidecar_cores(n4_cpus: int, allowed: set[int]) -> tuple[int, ...] | None:
+    """The CPUs of the in-leg sidecar probe: the two highest of
+    ``allowed`` (the CPUs this process may use) outside the 4N leg's
+    pin mask [0, n4_cpus), or None when fewer than two are free.
+
+    Raises ValueError when the 4N leg asks for a CPU outside ``allowed``.
+    """
+    legs = set(range(n4_cpus))
+    if not legs <= allowed:
+        raise ValueError(
+            f"the {n4_cpus}-CPU leg needs CPUs 0-{n4_cpus - 1}, but this process "
+            f"may use only {sorted(allowed)}; set SPARK_GRAFT_SCALE_PAIR"
+        )
+    spare = sorted(allowed - legs)
+    return tuple(spare[-2:]) if len(spare) >= 2 else None
 
 
 def _run_level(cpus: int) -> dict:
@@ -119,10 +144,11 @@ def _run_level(cpus: int) -> dict:
 
 
 
-def _run_level_probed(cpus: int, off_cores: tuple[int, ...]) -> dict:
+def _run_level_probed(cpus: int, off_cores: tuple[int, ...] | None) -> dict:
     """_run_level plus a CONCURRENT sidecar probe: while the pinned job
     runs on cores [0, cpus), a sampler thread pins THIS process to two
     spare high cores and samples 1-second 2-way capacity every ~5 s.
+    With ``off_cores`` None there is no sidecar (no samples, spread None).
     The 2026-08-18 runs showed why brackets are not enough: 8-way
     bracket probes can agree within 4% while the 8-core leg itself
     swings 39 -> 57 s — multi-minute host sag INSIDE a leg that only a
@@ -146,12 +172,14 @@ def _run_level_probed(cpus: int, off_cores: tuple[int, ...]) -> dict:
             os.sched_setaffinity(0, full)
 
     t = threading.Thread(target=sampler, daemon=True)
-    t.start()
+    if off_cores:
+        t.start()
     try:
         r = _run_level(cpus)
     finally:
         stop.set()
-        t.join()
+        if off_cores:
+            t.join()
     r["leg_probes_mops"] = [round(x, 1) for x in samples]
     # sustained-capacity estimate: mean of each PROBE_WINDOW-sample
     # window (~50 s wall); a trailing window shorter than half the
@@ -342,6 +370,10 @@ def main() -> None:
     pair = os.environ.get("SPARK_GRAFT_SCALE_PAIR", "2,8")
     n_cpus, n4_cpus = (int(x) for x in pair.split(","))
     trials = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "3"))
+    try:
+        off_cores = sidecar_cores(n4_cpus, os.sched_getaffinity(0))
+    except ValueError as exc:
+        sys.exit(f"scaling_bench: {exc}")
 
     sys.path.insert(0, _REPO)
     from osm_pt_validator_spark.hostprobe import parallel_probe
@@ -355,8 +387,6 @@ def main() -> None:
     # ratio measures the host window, not the engine.
     runs: dict[int, list[dict]] = {n_cpus: [], n4_cpus: []}
     pairs: list[dict] = []
-    n_host = os.cpu_count() or 32
-    off_cores = (n_host - 2, n_host - 1)  # spare high cores for the sidecar
     for _ in range(trials):
         # interleave: 4N first, then N, so slow host windows hit both
         p0 = parallel_probe(n4_cpus, seconds=3.0)
@@ -405,12 +435,16 @@ def main() -> None:
         eff = headline["efficiency"]
         t_n, t_4n = headline["t_n"], headline["t_4n"]
         basis = "probe-stable pair (bracket AND concurrent in-leg spreads <= 10%)"
+        if off_cores is None:
+            basis = "probe-stable pair (bracket spread <= 10%)"
     else:
         # no stable window in this run: fall back to best-of-level (the
         # old protocol) and SAY SO — the record is then evidence-weak
         t_n, t_4n = best[n_cpus]["t_total"], best[n4_cpus]["t_total"]
         eff = round((t_n / t_4n) / (n4_cpus / n_cpus), 3)
         basis = "NO probe-stable pair; best-of-level fallback (host-degraded run)"
+    if off_cores is None:
+        basis += "; no in-leg sidecar probe: fewer than two CPUs free outside the 4N leg"
     print(
         json.dumps(
             {

@@ -63,3 +63,26 @@ def test_one_module_knows_the_osm_url_format():
             if "https://www.openstreetmap.org/" in line:
                 offenders.append(f"{py.name}:{i}: {line.strip()}")
     assert not offenders, offenders
+
+
+CELL_FORMAT = re.compile(
+    r"shift(?:left|right)\(.*,\s*32\)"
+    r"|bitwiseAND\(F\.lit\(0xFFFFFFFF\)\)"
+    r"|4294967295",
+    re.IGNORECASE,
+)
+
+
+def test_one_module_knows_the_cell_format():
+    """The packed grid cell (i << 32) | j is packed, unpacked and
+    enumerated by functions/geo.py only (pack_cell, cell_to_ij,
+    cells_in_box, cell_window); a second spelling elsewhere in the
+    engine could drift from it."""
+    offenders = []
+    for py in PKG.rglob("*.py"):
+        if py.relative_to(PKG).as_posix() == "functions/geo.py":
+            continue
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            if CELL_FORMAT.search(line):
+                offenders.append(f"{py.relative_to(PKG)}:{i}: {line.strip()}")
+    assert not offenders, offenders

@@ -93,6 +93,35 @@ def test_kring_contains_self_and_clips(spark, pts_df):
         assert len(set(r.ring)) == len(r.ring)
 
 
+@pytest.mark.parametrize("k", [1, 2])
+def test_kring_is_the_row_major_clipped_window(spark, k):
+    """Every cell of the res-2 grid (corners, edges, interior): the ring
+    equals the Python row-major enumeration of the clipped window,
+    element for element."""
+    n = 4
+    cells = [(i << 32) | j for i in range(n) for j in range(n)]
+    df = spark.createDataFrame([(c,) for c in cells], "c long")
+    got = {
+        r.c: r.ring
+        for r in df.select("c", kring_cells(F.col("c"), k, 2).alias("ring")).collect()
+    }
+    for c in cells:
+        i, j = c >> 32, c & 0xFFFFFFFF
+        want = [
+            (a << 32) | b
+            for a in range(i - k, i + k + 1)
+            if 0 <= a < n
+            for b in range(j - k, j + k + 1)
+            if 0 <= b < n
+        ]
+        assert got[c] == want, (i, j)
+
+
+def test_kring_of_null_cell_is_empty(spark):
+    df = spark.createDataFrame([(None,)], "c long")
+    assert df.select(F.explode(kring_cells(F.col("c"), 1, 16))).count() == 0
+
+
 def test_haversine_vs_oracle(spark):
     df = spark.createDataFrame(
         [(55.95, -3.19, 51.5074, -0.1278)], "a double, b double, c double, d double"
