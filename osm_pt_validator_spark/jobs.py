@@ -7,7 +7,7 @@ OSM-shaped parquet tables and write verdict/error tables.
 
 Mirrors the reference's CLI/Lambda lifecycle (scripts/validate/main.go,
 cmd/trigger + cmd/validate-rm + cmd/validate-route) as one batch plan:
-work-list -> semi-join relations -> validate_all -> grouped sink.
+work-list -> validate_all over the full relations table -> grouped sink.
 Exit code 1 when any verdicts exist (O4, main.go:122-125).
 """
 
@@ -34,13 +34,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
 
+    from pyspark.storagelevel import StorageLevel
+
     from osm_pt_validator_spark.config import DEFAULT_CONFIG, ValidationConfig
-    from osm_pt_validator_spark.operators.pipeline import (
-        collect_invalid,
-        missing_relation_verdicts,
-        validate_all,
-    )
-    from osm_pt_validator_spark.plans.checkpoint import run_stage
+    from osm_pt_validator_spark.operators.pipeline import collect_invalid, validate_all
+    from osm_pt_validator_spark.plans.checkpoint import run_stage, stage_manifests
     from osm_pt_validator_spark.session import ensure_py_files, get_spark
     from osm_pt_validator_spark.sources.routes_file import read_routes_files
 
@@ -51,70 +49,37 @@ def main(argv: list[str] | None = None) -> int:
     ways = spark.read.parquet(f"{args.tables}/ways.parquet")
     relations = spark.read.parquet(f"{args.tables}/relations.parquet")
 
-    from pyspark.storagelevel import StorageLevel
-
-    # (config, relation-subset) work sets. The reference builds one
-    # validator per routes file from that file's config block
-    # (scripts/validate/main.go:70-74); we group files by *config value*
-    # (ValidationConfig is a frozen dataclass) so a homogeneous routes
-    # dir still runs as a single plan.
+    # (config, requested ids) work sets over the FULL relations table:
+    # validate_all decides what is validated and what is gone. The
+    # reference builds one validator per routes file from that file's
+    # config block (scripts/validate/main.go:70-74); we group files by
+    # *config value* (ValidationConfig is a frozen dataclass) so a
+    # homogeneous routes dir still runs as a single plan.
     work_sets: list[tuple[ValidationConfig, "object"]] = []
-    gone = None
-    gone_handled = None
     if args.relation_id:
         # reference -r path: Config{NaptanPlatformTags: npt}, npt
         # defaulting FALSE (scripts/validate/main.go:25-26,117)
         cfg = ValidationConfig(naptan_platform_tags=args.naptan)
-        work_sets.append(
-            (cfg, relations.filter(F.col("relation_id") == args.relation_id))
-        )
+        one = spark.range(args.relation_id, args.relation_id + 1)
+        work_sets.append((cfg, one.withColumnRenamed("id", "relation_id")))
     elif args.routes:
         worklist, configs = read_routes_files(spark, args.routes)
-        # a work-list id with no relations row must NOT be silently
-        # dropped: the reference's HTTP-410 path emits
-        # "relation no longer exists" (cmd/validate-rm/main.go:59-63)
-        gone = missing_relation_verdicts(worklist, relations)
-        gone_handled = worklist.select("relation_id").distinct()
         by_cfg: dict[ValidationConfig, list[str]] = {}
         for path, cfg in configs.items():
             by_cfg.setdefault(cfg, []).append(path)
         for cfg, files in sorted(by_cfg.items(), key=lambda kv: kv[1]):
-            ids = worklist.filter(F.col("source_file").isin(files)).select(
-                "relation_id"
-            ).distinct()
-            work_sets.append(
-                (cfg, relations.join(F.broadcast(ids), "relation_id", "left_semi"))
-            )
+            work_sets.append((cfg, worklist.filter(F.col("source_file").isin(files))))
     else:
-        work_sets.append((DEFAULT_CONFIG, relations))
+        # every validate_all branch reads the whole table: compute it
+        # once. A work-list run reads few rows of it, so it scans instead.
+        relations = relations.persist(StorageLevel.MEMORY_AND_DISK)
+        work_sets.append((DEFAULT_CONFIG, None))
 
     def _validate():
-        # validate_all reads each work set in several branches (the route
-        # set's two disjoint halves, masters, unknown, the gone path),
-        # and the route set feeds every validator stage — persist the
-        # FILTERED subset so it is computed once, not once per branch.
-        # Persisting the raw relations
-        # table instead would cache the whole table on a --relation-id
-        # run AND put a cache barrier in front of the parquet scan,
-        # blocking predicate pushdown of the work filter.
-        # gone_handled: a work-list id that is missing AND a member of a
-        # present route master would otherwise get "relation no longer
-        # exists" twice — once from the jobs-level gone set above and
-        # once from validate_all's master-member gone path. Routes mode
-        # supplies its own gone verdicts, so validate_all excludes the
-        # work-list ids from its master-member gone.
         parts = [
-            validate_all(
-                rels.persist(StorageLevel.MEMORY_AND_DISK),
-                nodes,
-                ways,
-                cfg,
-                gone_handled=gone_handled,
-            )[0]
-            for cfg, rels in work_sets
+            validate_all(relations, nodes, ways, cfg, requested=ids)[0]
+            for cfg, ids in work_sets
         ]
-        if gone is not None:
-            parts.append(gone)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -123,8 +88,10 @@ def main(argv: list[str] | None = None) -> int:
     verdicts = run_stage(spark, args.out, "verdicts", _validate)
     run_stage(spark, args.out, "invalid_relations", lambda: collect_invalid(verdicts))
 
-    n = verdicts.count()
-    print(f"relations with verdicts: {verdicts.select('relation_id').distinct().count()}; verdicts: {n}")
+    # the summary comes from the stage manifests: no Spark action
+    m = stage_manifests(args.out)
+    n = m["verdicts"]["rows"]
+    print(f"relations with verdicts: {m['invalid_relations']['rows']}; verdicts: {n}")
     return 1 if n > 0 else 0
 
 

@@ -8,8 +8,7 @@ validation fan-out, and between consecutive crawls almost nothing
 changes, so the scalable job is:
 
     changed = content-diff(snapshot_t, snapshot_t+1)   # cheap, set-based
-    verdicts = validate_all(changed subset only)
-    gone    -> 'relation no longer exists' verdicts (410 parity)
+    verdicts = validate_all(snapshot_t+1, requested=new + changed + gone)
 
 Content hashing happens scan-side (md5 of a canonical member/tag
 serialization), so the diff join carries (relation_id, 32-byte hash)
@@ -82,26 +81,20 @@ def validate_incremental(
     ways: DataFrame,
     config: ValidationConfig = DEFAULT_CONFIG,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Validate only new/changed relations of the new snapshot; emit
-    'relation no longer exists' verdicts for gone ones.
+    """Validate only new/changed relations of the new snapshot, plus
+    every member of a new/changed route master (the reference's fan-out,
+    cmd/validate-rm/main.go:118-168) — unchanged members included;
+    gone relations get validate_all's HTTP-410 verdict.
 
-    Returns (verdicts, engine_errors, workset).  Unchanged relations
-    produce NO verdict rows — the caller keeps the previous snapshot's
-    verdicts for them (checkpointed by plans/checkpoint.py), which is
-    exactly the resume-from-lineage contract.
+    Returns (verdicts, engine_errors, workset).  An unchanged relation
+    that no new/changed master lists produces NO verdict rows — the
+    caller keeps the previous snapshot's verdicts for it (checkpointed
+    by plans/checkpoint.py), which is exactly the resume-from-lineage
+    contract.
     """
     from osm_pt_validator_spark.operators.pipeline import validate_all
 
     ws = incremental_workset(old_rels, new_rels)
-    todo_ids = ws.filter(F.col("status").isin("new", "changed")).select("relation_id")
-    todo = new_rels.join(todo_ids, "relation_id", "left_semi")
-    verdicts, errors = validate_all(todo, nodes, ways, config)
-
-    gone = ws.filter(F.col("status") == "gone").select(
-        "relation_id",
-        F.lit(0).alias("stage_no"),
-        F.lit(0).cast("long").alias("seq"),
-        F.lit("").alias("url"),
-        F.lit("relation no longer exists").alias("message"),
-    )
-    return verdicts.unionByName(gone), errors, ws
+    todo = ws.filter(F.col("status") != "unchanged")
+    verdicts, errors = validate_all(new_rels, nodes, ways, config, requested=todo)
+    return verdicts, errors, ws

@@ -43,11 +43,12 @@ from osm_pt_validator_spark.operators.route_master import (
     validate_route_masters,
 )
 from osm_pt_validator_spark.operators.set_stages import set_based_verdicts
-from osm_pt_validator_spark.operators.way_order import (
+from osm_pt_validator_spark.operators.way_order import validate_way_and_stop_order
+from osm_pt_validator_spark.schemas import (
     STAGE_ENGINE_ERROR,
-    validate_way_and_stop_order,
+    STAGE_MEMBER_ORDER,
+    STAGE_PTV2,
 )
-from osm_pt_validator_spark.schemas import STAGE_MEMBER_ORDER, STAGE_PTV2
 
 
 def explode_members(relations: DataFrame) -> DataFrame:
@@ -148,43 +149,53 @@ def validate_all(
     nodes: DataFrame,
     ways: DataFrame,
     config: ValidationConfig = DEFAULT_CONFIG,
-    gone_handled: DataFrame | None = None,
+    requested: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """O1 type dispatch (scripts/validate/main.go:128-138) +
     O2 route_master split (cmd/validate-rm/main.go:118-168).
 
-    route_master members are validated as route relations one level
-    deep; unknown relation types go to the engine-error channel
-    (reference: Go error "unknown relation type").
+    relations: the FULL relations table — master members are looked up
+    in it and presence is checked against it.
+    requested: relation_ids to validate — a work list, broadcast; None
+    validates every relation.
 
-    gone_handled: relation_ids whose "relation no longer exists"
-    verdicts the CALLER already emits (jobs.py routes mode) — excluded
-    from the master-member gone path so a missing id that is both on
-    the work list and a master member gets ONE verdict, not two.
+    A requested route, and every relation a requested route_master
+    lists (whatever its type, one level deep), is validated once as a
+    route. Requested masters get the master checks; requested relations
+    of any other type go to the engine-error channel ("unknown relation
+    type"). Each requested or master-listed id with no relation row
+    gets ONE "relation no longer exists" verdict — the HTTP-410 path
+    (cmd/validate-rm/main.go:59-63,77-96).
     """
     rel_type = F.col("tags").getItem("type")
     is_route = F.coalesce(rel_type == "route", F.lit(False))
-    masters = relations.filter(rel_type == "route_master")
-    unknown = relations.filter(rel_type.isNull() | ~rel_type.isin("route", "route_master"))
+    chosen = relations
+    if requested is not None:
+        requested = requested.select("relation_id")
+        chosen = relations.join(F.broadcast(requested), "relation_id", "left_semi")
+    masters = chosen.filter(rel_type == "route_master")
+    unknown = chosen.filter(rel_type.isNull() | ~rel_type.isin("route", "route_master"))
 
     master_verdicts = validate_route_masters(masters, config.minimum_route_variants)
 
-    # split: master members become route work items; referenced
-    # relations join back against the relations table. A member id with
-    # no relation row mirrors the HTTP-410 path -> "relation no longer
-    # exists" verdict (cmd/validate-rm/main.go:59-63,77-96).
-    work = split_route_master_members(masters)
-    gone = missing_relation_verdicts(work, relations)
-    if gone_handled is not None:
-        gone = gone.join(F.broadcast(gone_handled), "relation_id", "left_anti")
-    # the route set as a disjoint union: every route, plus every OTHER
-    # relation a master lists (a nested master is validated as a route
-    # too). A master member that is also a route is in the first half
-    # only, so it is validated once where the reference would validate
-    # it twice (two SQS events) — no dedup shuffle needed.
-    all_routes = relations.filter(is_route).unionByName(
-        relations.filter(~is_route).join(
-            F.broadcast(work.select("relation_id")), "relation_id", "left_semi"
+    # split: master members become route work items, looked up in the
+    # full relations table
+    listed = split_route_master_members(masters).select("relation_id")
+    gone = missing_relation_verdicts(
+        listed if requested is None else listed.unionByName(requested), relations
+    )
+    # the route set as a disjoint union: every chosen route, plus every
+    # OTHER relation a master lists (a nested master is validated as a
+    # route too). A listed relation that is also a chosen route is in
+    # the first half only, so it is validated once where the reference
+    # would validate it twice (two SQS events) — no dedup shuffle needed.
+    routes = chosen.filter(is_route)
+    listed_rels = relations.join(F.broadcast(listed), "relation_id", "left_semi")
+    all_routes = routes.unionByName(
+        listed_rels.filter(~is_route)
+        if requested is None
+        else listed_rels.join(
+            F.broadcast(routes.select("relation_id")), "relation_id", "left_anti"
         )
     )
 

@@ -33,7 +33,6 @@ from collections.abc import Iterable, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from osm_pt_validator_spark.functions.elements import (
     element_url_str,
@@ -41,9 +40,11 @@ from osm_pt_validator_spark.functions.elements import (
     oneway_tag,
 )
 from osm_pt_validator_spark.schemas import (
+    STAGE_ENGINE_ERROR,
     STAGE_ONEWAY,
     STAGE_STOP_ORDER,
     STAGE_WAY_ORDER,
+    VERDICT_SCHEMA,
 )
 
 FORWARD = "forward"
@@ -225,19 +226,6 @@ def run_stop_order(
 # Spark operator
 # ---------------------------------------------------------------------------
 
-_DETAIL_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("relation_id", T.LongType(), False),
-        T.StructField("stage_no", T.IntegerType(), False),
-        T.StructField("seq", T.LongType(), False),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("message", T.StringType(), False),
-    ]
-)
-
-STAGE_ENGINE_ERROR = -1
-
-
 def _validate_relation(rel_id: int, members: list) -> list[tuple]:
     """Run automaton + oneway + stop order for one relation.
 
@@ -392,7 +380,7 @@ def validate_way_and_stop_order(
             )
         ).alias("ms")
     )
-    return grouped.mapInPandas(_validate_rows, schema=_DETAIL_OUT_SCHEMA)
+    return grouped.mapInPandas(_validate_rows, schema=VERDICT_SCHEMA)
 
 
 def cheap_gap_prefilter(members: DataFrame, ways: DataFrame) -> DataFrame:

@@ -89,17 +89,27 @@ def run_stage(
     return out
 
 
+def stage_manifests(root: str) -> dict[str, dict]:
+    """The stage manifests run_stage wrote under root, by stage name:
+    {"stage", "seconds", "rows"} each. Plain file reads, no Spark job."""
+    out = {}
+    for fn in sorted(os.listdir(root)):
+        if fn.endswith("__manifest.json"):
+            with open(os.path.join(root, fn)) as f:
+                m = json.load(f)
+            out[m["stage"]] = m
+    return out
+
+
 def stage_metrics(spark: SparkSession, root: str) -> DataFrame:
     """The run's metrics table: one row per completed stage (name, wall
     seconds, output rows) assembled from the stage manifests. On a real
     deployment this is the table an orchestrator reads to spot the slow
     stage of a resumed 10^12-doc job."""
-    rows = []
-    for fn in sorted(os.listdir(root)):
-        if fn.endswith("__manifest.json"):
-            with open(os.path.join(root, fn)) as f:
-                m = json.load(f)
-            rows.append((m["stage"], float(m["seconds"]), int(m["rows"])))
+    rows = [
+        (m["stage"], float(m["seconds"]), int(m["rows"]))
+        for m in stage_manifests(root).values()
+    ]
     return spark.createDataFrame(rows, "stage string, seconds double, rows long")
 
 

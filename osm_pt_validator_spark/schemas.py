@@ -73,16 +73,6 @@ VERDICT_SCHEMA = T.StructType(
     ]
 )
 
-# engine errors are a separate channel from verdicts — the reference
-# returns Go errors (e.g. "failed to load way %d", way_order.go:25-30)
-# distinct from []ValidationError.
-ENGINE_ERROR_SCHEMA = T.StructType(
-    [
-        T.StructField("relation_id", T.LongType(), False),
-        T.StructField("message", T.StringType(), False),
-    ]
-)
-
 MENTION_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -94,6 +84,10 @@ MENTION_SCHEMA = T.StructType(
     ]
 )
 
+#: a verdict row on this stage is an engine error, not a verdict — the
+#: reference returns Go errors (e.g. "failed to load way %d",
+#: way_order.go:25-30) distinct from []ValidationError.
+STAGE_ENGINE_ERROR = -1
 STAGE_PTV2 = 0
 STAGE_TAGS = 1
 STAGE_MEMBER_ORDER = 2

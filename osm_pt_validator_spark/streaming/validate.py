@@ -18,6 +18,12 @@ multi-join + grouped-Arrow stages per relation, which are per-row
 independent — there is no cross-batch state, so micro-batch reuse of
 the batch plan IS the idiomatic Spark solution (state would only enter
 for cross-batch dedup, which `streaming/dedup.py` provides upstream).
+
+Known gap: each micro-batch is its own ``relations`` table for
+`validate_all`, which looks route-master members up and decides
+presence in the table it is given. A master whose members arrived in an
+EARLIER batch therefore gets false gone (HTTP-410) verdicts
+for them. The stream has no full relations table to pass instead.
 """
 
 from __future__ import annotations

@@ -86,3 +86,16 @@ def test_one_module_knows_the_cell_format():
             if CELL_FORMAT.search(line):
                 offenders.append(f"{py.relative_to(PKG)}:{i}: {line.strip()}")
     assert not offenders, offenders
+
+
+def test_one_module_decides_gone():
+    """The HTTP-410 verdict "relation no longer exists" is built by
+    operators/pipeline.py only (missing_relation_verdicts, called from
+    validate_all); a job or operator that spells it again decides
+    presence against some other table than the full relations table."""
+    spelled = {
+        py.relative_to(PKG).as_posix()
+        for py in PKG.rglob("*.py")
+        if "relation no longer exists" in py.read_text()
+    }
+    assert spelled == {"operators/pipeline.py"}, spelled

@@ -401,6 +401,35 @@ def test_nested_route_master_member_validated_as_route(spark, dims):
     assert sorted_verdicts(verdicts, 9722) == []
 
 
+def test_validate_incremental_fans_out_changed_master(spark, dims):
+    """A changed route master's members are validated (the reference's
+    fan-out, cmd/validate-rm/main.go:118-168) even when unchanged: no
+    false "relation no longer exists", and the verdicts equal a full
+    run's."""
+    from osm_pt_validator_spark.operators.incremental import validate_incremental
+
+    nodes, ways = dims
+    routes = [
+        relation_row(9001, stop_members(102, 104) + way_members(3, 4), route_tags()),
+        relation_row(9002, stop_members(100, 102) + way_members(1, 3), route_tags()),
+    ]
+    master_members = [member("relation", 9001), member("relation", 9002)]
+    old = relations_df(spark, routes + [relation_row(
+        9005, master_members,
+        {"type": "route_master", "name": "M", "ref": "M", "operator": "Op"},
+    )])
+    new = relations_df(spark, routes + [relation_row(
+        9005, master_members,
+        {"type": "route_master", "name": "M2", "ref": "M", "operator": "Op"},
+    )])
+
+    verdicts, _, _ = validate_incremental(old, new, nodes, ways, ValidationConfig())
+    full, _ = validate_all(new, nodes, ways, ValidationConfig())
+    assert sorted(map(tuple, verdicts.collect())) == sorted(map(tuple, full.collect()))
+    assert sorted_verdicts(full, 9002), "the defective member must have verdicts"
+    assert sorted_verdicts(verdicts, 9001) == []
+
+
 def test_validate_incremental_only_changed(spark, dims):
     """Incremental validation: unchanged relations produce no verdicts
     (skipped entirely), changed/new ones are validated identically to a

@@ -208,6 +208,15 @@ def test_validate_all_no_route_dedup_shuffle(spark, tmp_path):
     assert rows(once), "the shared route must have verdicts to count"
     assert rows(verdicts) == rows(once)
 
+    # a work list holding master 9 and its member route 1: route 1 is
+    # requested AND listed, and is still validated once, without a
+    # dedup shuffle
+    work = spark.createDataFrame([(9,), (1,)], "relation_id long")
+    listed, _ = validate_all(rels, nodes, ways, ValidationConfig(), requested=work)
+    plan = plan_of(listed)
+    assert not re.search(r"^\(\d+\) Sort(Aggregate)?\b", plan, re.M), plan
+    assert rows(listed) == rows(once)
+
 
 def test_knn_probe_side_broadcasts_ring_dim(spark):
     """kNN: the exploded k-ring probe joins the stops dim; with a small

@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 
 def _write_routes_file(path, config=None):
     doc = {
@@ -424,3 +426,65 @@ def test_job_gone_worklist_id_also_master_member_single_verdict(spark, tmp_path)
     assert [(r.relation_id, r.message) for r in gone_rows] == [
         (404404, "relation no longer exists")
     ]
+
+
+def _work_list_args(tmp_path, mode, rid):
+    """A work list naming only relation ``rid``, in the given job mode,
+    with naptan checks on, as in an all-relations run (DEFAULT_CONFIG)."""
+    if mode == "relation_id":
+        return ["--relation-id", str(rid), "--naptan"]
+    routes = tmp_path / f"routes_{rid}.json"
+    with open(routes, "w") as f:
+        json.dump({"config": {"naptanPlatformTags": True},
+                   "routes": {"g": [{"name": "master", "relation_id": rid}]}}, f)
+    return ["--routes", str(routes)]
+
+
+@pytest.mark.parametrize("mode", ["routes", "relation_id"])
+def test_job_work_list_master_validates_present_members(spark, tmp_path, mode):
+    """A work list naming only a route master validates the relations it
+    lists (cmd/validate-rm/main.go:118-168) against the FULL relations
+    table: a present member gets no "relation no longer exists" verdict,
+    and its verdicts equal those of an all-relations run."""
+    from osm_pt_validator_spark.fixtures import (
+        member,
+        relation_row,
+        route_tags,
+        stop_members,
+        way_members,
+    )
+    from osm_pt_validator_spark.jobs import main
+
+    def master(rid, *refs):
+        return relation_row(
+            rid,
+            [member("relation", r) for r in refs],
+            {"type": "route_master", "name": "M", "ref": "M", "operator": "Op"},
+        )
+
+    tables = tmp_path / "tables"
+    _write_tables(
+        spark, tables,
+        [
+            relation_row(9001, stop_members(102, 104) + way_members(3, 4), route_tags()),
+            relation_row(9002, stop_members(100, 102) + way_members(1, 3), route_tags()),
+            master(9005, 9001),
+            master(9006, 9001, 9002),
+        ],
+    )
+
+    def run(name, extra):
+        out = tmp_path / name
+        rc = main(["--tables", str(tables), "--out", str(out), "--cpus", "4", *extra])
+        rows = spark.read.parquet(str(out / "verdicts")).collect()
+        return rc, sorted(tuple(r) for r in rows)
+
+    # master 9005 lists the valid route 9001 only
+    assert run("valid", _work_list_args(tmp_path, mode, 9005)) == (0, [])
+
+    # master 9006 also lists 9002, whose ways leave a gap
+    rc_all, every = run("all", [])
+    rc, got = run("defective", _work_list_args(tmp_path, mode, 9006))
+    assert rc == rc_all == 1
+    assert got and got == every
+    assert "relation no longer exists" not in {r[4] for r in got}
