@@ -5,7 +5,7 @@ Headline suite (the engine's scale-critical paths):
                        pages (drives the docs/min headline metric)
   * validation       : full validator pipeline over ~N synthetic route
                        relations (frontier automaton at scale —
-                       applyInPandas across relations)
+                       one mapInPandas hop across relations)
   * spatial_join     : salted cell join, lineitem-derived points x
                        supplier stops (drives join rows/sec)
   * knn_match        : k-ring kNN customers -> supplier stops

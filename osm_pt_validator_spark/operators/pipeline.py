@@ -8,19 +8,18 @@ Stage order and gating (all load-bearing for verdict parity):
   1. RE tag checks (route_relation.go:23-24).
   2. member order (route_relation.go:26-27).
   3. platform/stop node tag checks (route_relation.go:29-33); a node
-     that fails to load aborts stages 3-7 for that relation and emits
-     an engine error.
+     member that fails to load aborts stages 3-7 for that relation and
+     emits an engine error.
   4/5. way order + oneway, 6. stop order (gated on zero way-order
      verdicts), inside one Arrow-batched per-relation pass.
   7. node-member count (route_relation.go:43-46).
 
-Scale notes: stages 0-2 and 7 are pure projections over the relations
-table (no shuffle). Stage 3 is one hash join against the nodes dim.
-Stages 4-6 are one shuffle on relation_id + one Arrow hop. Each gating
-decision is made once: the route set is one disjoint union (no dedup
-shuffle), and the stage-3 abort is one broadcast filter over every
-stage's output. Verdict order inside a relation is reconstructed by
-sorting on (stage_no, seq) — deterministic across any partitioning.
+Scale notes: the route set's members are joined once to the nodes ∪
+ways element dim and grouped to ONE row per relation
+(members.member_rows). One projection over that row builds stages 0-3
+and 7 and decides the node-load abort; one mapInPandas hop passes those
+verdicts through and adds stages 4-6. Verdict order inside a relation
+is reconstructed by sorting on (stage_no, seq).
 """
 
 from __future__ import annotations
@@ -34,35 +33,22 @@ from osm_pt_validator_spark.functions.elements import (
     relation_url,
     render_verdict,
 )
+from osm_pt_validator_spark.operators.member_order import member_order_verdicts
+from osm_pt_validator_spark.operators.members import explode_members  # noqa: F401 (public)
+from osm_pt_validator_spark.operators.members import member_rows, node_elements, way_elements
 from osm_pt_validator_spark.operators.node_checks import (
-    missing_node_errors,
-    validate_relation_nodes,
+    is_missing_node,
+    node_load_errors,
+    node_verdicts,
 )
 from osm_pt_validator_spark.operators.route_master import (
     split_route_master_members,
     validate_route_masters,
 )
-from osm_pt_validator_spark.operators.set_stages import set_based_verdicts
-from osm_pt_validator_spark.operators.way_order import validate_way_and_stop_order
-from osm_pt_validator_spark.schemas import (
-    STAGE_ENGINE_ERROR,
-    STAGE_MEMBER_ORDER,
-    STAGE_PTV2,
-)
-
-
-def explode_members(relations: DataFrame) -> DataFrame:
-    """(relation_id, member_idx, type, ref, role) — posexplode keeps the
-    semantic member order as an explicit column."""
-    return relations.select(
-        "relation_id", F.posexplode("members").alias("member_idx", "m")
-    ).select(
-        "relation_id",
-        "member_idx",
-        F.col("m.type").alias("type"),
-        F.col("m.ref").alias("ref"),
-        F.col("m.role").alias("role"),
-    )
+from osm_pt_validator_spark.operators.set_stages import node_count_verdicts, ptv2_gate
+from osm_pt_validator_spark.operators.tags import re_tag_verdicts
+from osm_pt_validator_spark.operators.way_order import automaton_members, run_automaton
+from osm_pt_validator_spark.schemas import STAGE_ENGINE_ERROR
 
 
 def validate_route_relations(
@@ -79,42 +65,34 @@ def validate_route_relations(
     engine_errors: (relation_id, message) — the reference's Go-error
     channel (load failures), distinct from verdicts.
     """
-    # stages 0 + 1 + 2 + 7 fused: ONE projection pass over relations
-    # (separate per-stage branches would re-scan the table per stage)
-    vset = set_based_verdicts(relations, config)
-    members = explode_members(relations.filter(is_ptv2(F.col("tags"))))
-    v3 = validate_relation_nodes(members, nodes, config.naptan_platform_tags)
-    # stages 4-6 (+ way-load engine errors on stage_no = -1)
-    v456 = validate_way_and_stop_order(
-        members, ways, config.ignore_traversal_direction_ways
-    )
+    tags = F.col("tags")
+    # outer explode: a relation with no members — or gated off by stage
+    # 0, whose members no stage reads — keeps its row
+    members = relations.select(
+        "relation_id",
+        "tags",
+        F.posexplode_outer(F.when(is_ptv2(tags), F.col("members"))).alias("member_idx", "m"),
+    ).select("relation_id", "tags", "member_idx", "m.type", "m.ref", "m.role")
+    rows = member_rows(members, node_elements(nodes), way_elements(ways))
 
-    # abort: a node member that fails to load discards stages 3-7 of its
-    # relation, way loads included (route_relation.go:29-33), so only
-    # stages 0-2 survive. The abort set is an ERROR set — tiny by nature
-    # at any scale — so broadcast it explicitly: its size is statically
-    # unknowable (derived data) and would otherwise plan a sort-merge
-    # join over every verdict for a near-empty list.
-    node_errors = missing_node_errors(members, nodes)
-    aborted = F.broadcast(
-        node_errors.select("relation_id").distinct().withColumn("__ab", F.lit(True))
-    )
-    kept = (
-        vset.unionByName(v3)
-        .unionByName(v456)
-        .join(aborted, "relation_id", "left")
-        .filter(
-            F.col("__ab").isNull()
-            | F.col("stage_no").between(STAGE_PTV2, STAGE_MEMBER_ORDER)
+    ms = F.col("ms")
+    url = relation_url("relation_id")
+    # a node member that fails to load discards stages 3-7 of its
+    # relation, way loads included (route_relation.go:29-33)
+    aborted = F.exists(ms, is_missing_node)
+    stages_3_7 = F.when(aborted, node_load_errors(ms)).otherwise(
+        F.concat(
+            node_verdicts(ms, config.naptan_platform_tags),
+            node_count_verdicts(ms, url, config.minimum_node_members),
         )
-        .drop("__ab")
     )
+    vs = ptv2_gate(
+        tags, url, F.concat(re_tag_verdicts(tags, url), member_order_verdicts(ms), stages_3_7)
+    )
+    ws = F.when(~aborted, automaton_members(ms))
+    out = run_automaton(rows, vs, ws, config.ignore_traversal_direction_ways)
     is_error = F.col("stage_no") == STAGE_ENGINE_ERROR
-    verdicts = kept.filter(~is_error)
-    engine_errors = node_errors.unionByName(
-        kept.filter(is_error).select("relation_id", "message")
-    )
-    return verdicts, engine_errors
+    return out.filter(~is_error), out.filter(is_error).select("relation_id", "message")
 
 
 def missing_relation_verdicts(work: DataFrame, relations: DataFrame) -> DataFrame:

@@ -1,14 +1,10 @@
-"""Fused set-based validator stages — ONE projection pass.
+"""Set-based validator stages 0/1/2/7 — pure column algebra over
+(relation_id, members, tags).
 
-`pipeline.validate_route_relations` composes stages 0/1/2/7 (PTv2
-gate, RE tags, member order, node count) which are all pure column
-algebra over (relation_id, members, tags). Computing them as separate
-DataFrame branches re-scans the relations table once per stage — fine
-at test scale, 4x wasted I/O at 100 TB. This module concatenates the
-stages' verdict-array builders (tags.re_tag_verdicts,
-member_order.member_order_verdicts, node_count_verdicts) into ONE
-ARRAY<STRUCT<stage_no,seq,url,message>> per relation in a single
-select, then explodes: one scan, zero shuffles, whole-stage codegen.
+The stage-0 gate and node-count verdict-array builders live here.
+`pipeline.validate_route_relations` uses them in its one projection over
+one row per relation; `set_based_verdicts` builds stages 0/1/2/7
+straight from the relations table: one scan, zero shuffles.
 """
 
 from __future__ import annotations
@@ -49,6 +45,14 @@ def node_count_verdicts(members: Column, url: Column, minimum: int) -> Column:
     )
 
 
+def ptv2_gate(tags: Column, url: Column, checks: Column) -> Column:
+    """Stage 0 (route_relation.go:18-21): a non-PTv2 relation gets ONLY
+    the gate verdict; a PTv2 one gets ``checks``."""
+    return F.when(
+        ~is_ptv2(tags), F.array(verdict(STAGE_PTV2, F.lit(0), url, F.lit(MSG_PTV2)))
+    ).otherwise(checks)
+
+
 def set_based_verdicts(
     relations: DataFrame, config: ValidationConfig
 ) -> DataFrame:
@@ -56,15 +60,9 @@ def set_based_verdicts(
     tags = F.col("tags")
     members = F.col("members")
     url = relation_url("relation_id")
-    # stage 0 gate: non-PTv2 relations emit ONLY the gate verdict
-    checks = F.when(
-        ~is_ptv2(tags),
-        F.array(verdict(STAGE_PTV2, F.lit(0), url, F.lit(MSG_PTV2))),
-    ).otherwise(
-        F.concat(
-            re_tag_verdicts(tags, url),
-            member_order_verdicts(members),
-            node_count_verdicts(members, url, config.minimum_node_members),
-        )
+    checks = F.concat(
+        re_tag_verdicts(tags, url),
+        member_order_verdicts(members),
+        node_count_verdicts(members, url, config.minimum_node_members),
     )
-    return explode_verdicts(relations, checks)
+    return explode_verdicts(relations, ptv2_gate(tags, url, checks))

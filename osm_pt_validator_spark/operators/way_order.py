@@ -3,15 +3,13 @@
 This is the one check in the engine that is genuinely sequential per
 relation (the frontier automaton's state depends on the full prefix of
 the member-way list, and the greedy stop matcher on a running index), so
-it is NOT set-expressible. The Spark mapping is:
-
-    route_detail (one row per way/stop member, shuffled on relation_id)
-        .groupBy("relation_id")
-        .applyInPandas(_validate_group, VERDICT-shaped schema)
-
-Per-relation work is tiny (≤ hundreds of members); parallelism — and
-the 100 TB story — comes from the *millions of relations* spread across
-executors, one Arrow batch per group, no per-row Python UDFs.
+it is NOT set-expressible. The Spark mapping (``run_automaton``) is one
+``mapInPandas`` hop over the pipeline's one row per relation: ``ws`` is
+the route ways and stops the automaton reads, ``vs`` the relation's
+verdicts built in Spark, passed through so that every verdict and
+engine error leaves one operator. Per-relation work is tiny; parallelism
+comes from the *millions of relations* spread across executors, many
+relations per Arrow batch, no per-row Python UDFs.
 
 Semantics transcribed from the reference (studied, not copied):
   * frontier automaton     pkg/validation/way_order.go:11-98
@@ -29,16 +27,18 @@ stop_order_test.go.
 from __future__ import annotations
 
 from collections.abc import Iterable, Sequence
+from functools import partial
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osm_pt_validator_spark.functions.elements import (
+    VERDICT_TYPE,
     element_url_str,
     is_stop_role,
-    oneway_tag,
 )
+from osm_pt_validator_spark.operators.members import member_rows, way_elements
 from osm_pt_validator_spark.schemas import (
     STAGE_ENGINE_ERROR,
     STAGE_ONEWAY,
@@ -226,16 +226,16 @@ def run_stop_order(
 # Spark operator
 # ---------------------------------------------------------------------------
 
-def _validate_relation(rel_id: int, members: list) -> list[tuple]:
+def _validate_relation(rel_id: int, members: list, ignore: frozenset[int]) -> list[tuple]:
     """Run automaton + oneway + stop order for one relation.
 
-    members: dicts with (member_idx, kind, ref, nodes, oneway,
-    ignore_oneway), already sorted by member_idx.
+    members: dicts (type, ref, nodes, oneway) of its route ways and
+    stops, in member order (``automaton_members``).
     Returns rows (relation_id, stage_no, seq, url, message).
     """
     out: list[tuple] = []
-    ways_m = [m for m in members if m["kind"] == "way"]
-    stops = [int(m["ref"]) for m in members if m["kind"] == "stop"]
+    ways_m = [m for m in members if m["type"] == "way"]
+    stops = [int(m["ref"]) for m in members if m["type"] == "node"]
 
     # W5: any member way that failed to load => engine error, and the
     # way-order scan yields no verdicts/directions (way_order.go:25-30).
@@ -256,7 +256,6 @@ def _validate_relation(rel_id: int, members: list) -> list[tuple]:
             )
             for m in ways_m
         ]
-        ignore = {int(m["ref"]) for m in ways_m if m["ignore_oneway"]}
         way_verdicts, directs, _ = run_way_order(ways, ignore)
         for i, (url, msg) in enumerate(way_verdicts):
             stage = STAGE_WAY_ORDER if msg == MSG_BAD_ORDER else STAGE_ONEWAY
@@ -272,80 +271,53 @@ def _validate_relation(rel_id: int, members: list) -> list[tuple]:
     return out
 
 
-def route_detail(
-    members: DataFrame,
-    ways: DataFrame,
-    ignore_ways: Sequence[int] = (),
-) -> DataFrame:
-    """Build the per-relation detail rows the automaton consumes.
-
-    members: exploded relation members
-    (relation_id, member_idx, type, ref, role).
-
-    Plan shape (scale notes):
-      * route ways join `ways` on ref=way_id — a shuffle hash join on
-        way_id; when the ways dim is small enough Catalyst/AQE picks
-        broadcast. Left join so missing ways surface as engine errors
-        instead of vanishing (way_order.go:25-30 parity).
-      * stops need no join — they carry only the ref.
-    """
-    is_way = (F.col("type") == "way") & (F.col("role") == "")
-    is_stop = (F.col("type") == "node") & is_stop_role(F.col("role"))
-    # ONE pass over the exploded members (a union of separate way/stop
-    # branches would scan + explode the relations table twice — 2x the
-    # read at 100 TB). The ways join keys on ref=way_id with the
-    # kind='way' predicate folded into the join condition, so stop rows
-    # null-extend even if a node ref collides with a way id.
-    # No join hint: a SHUFFLE_HASH hint would force SHJ and forgo the
-    # broadcast plan even for a tiny ways dim (hints resolve before
-    # size-based selection). The session's preferSortMergeJoin=false
-    # still avoids sort-merge's two sorts (node arrays sort expensively)
-    # whenever the ways build side is partition-small, and degrades to
-    # the spill-safe sort-merge only for a genuinely huge dim.
-    return (
-        members.filter(is_way | is_stop)
-        .select(
-            "relation_id",
-            "member_idx",
-            F.when(F.col("type") == "way", F.lit("way")).otherwise(F.lit("stop")).alias("kind"),
-            "ref",
-        )
-        .join(
-            ways,
-            (F.col("ref") == F.col("way_id")) & (F.col("kind") == "way"),
-            "left",
-        )
-        .select(
-            "relation_id",
-            "member_idx",
-            "kind",
-            "ref",
-            "nodes",
-            F.when(F.col("kind") == "way", oneway_tag(F.col("tags"))).alias("oneway"),
-            (
-                ((F.col("kind") == "way") & F.col("ref").isin([int(w) for w in ignore_ways]))
-                if ignore_ways
-                else F.lit(False)
-            ).alias("ignore_oneway"),
-        )
+def automaton_members(ms: Column) -> Column:
+    """The automaton's input from a relation's ``ms`` (members.member_rows):
+    its route ways (role '') and stop-role nodes in member order, as
+    (type, ref, nodes, oneway). A way that failed to load has NULL nodes."""
+    kept = F.filter(
+        ms,
+        lambda m: ((m["type"] == "way") & (m["role"] == ""))
+        | ((m["type"] == "node") & is_stop_role(m["role"])),
     )
+    fields = ("type", "ref", "nodes", "oneway")
+    return F.transform(kept, lambda m: F.struct(*[m[f].alias(f) for f in fields]))
 
 
-def _validate_rows(batches):
-    """mapInPandas body over PRE-GROUPED rows: one row per relation,
-    members as a sorted ARRAY<STRUCT>. Every relation is self-contained
-    in its row, so Arrow batch boundaries need no carry-over, and the
-    per-group cost is a plain Python call (~50us) instead of one
-    applyInPandas UDF invocation per group (~2ms) — a 20-40x win when
-    relations are small and numerous (the 100 TB shape)."""
+def _validate_rows(batches, ignore: frozenset[int]):
+    """mapInPandas body: one row per relation with its verdicts ``vs``
+    and automaton input ``ws`` (NULL: stages 3-7 are aborted). A row is
+    self-contained, so Arrow batch boundaries need no carry-over."""
     cols = ["relation_id", "stage_no", "seq", "url", "message"]
     for pdf in batches:
         out: list[tuple] = []
-        for rel_id, ms in zip(pdf["relation_id"], pdf["ms"]):
-            out.extend(_validate_relation(int(rel_id), list(ms)))
+        for rel_id, vs, ws in zip(pdf["relation_id"], pdf["vs"], pdf["ws"]):
+            rel_id = int(rel_id)
+            out.extend((rel_id, v["stage_no"], v["seq"], v["url"], v["message"]) for v in vs)
+            if ws is not None:
+                out.extend(_validate_relation(rel_id, list(ws), ignore))
         yield pd.DataFrame(out, columns=cols).astype(
             {"relation_id": "int64", "stage_no": "int32", "seq": "int64"}
         )
+
+
+def run_automaton(
+    rows: DataFrame, vs: Column, ws: Column, ignore_ways: Sequence[int] = ()
+) -> DataFrame:
+    """The one Arrow hop: every VERDICT row of ``rows`` — the verdict
+    array ``vs`` passed through, then the stage 4/5/6 verdicts and
+    stage -1 way-load errors of the automaton over ``ws``.
+
+    Batch bound: one relation = one Arrow row, so the per-row payload
+    is ~(members × mean nodes-per-way × 8B). Arrow's per-buffer limit
+    is 2 GiB per column chunk, i.e. the design holds to relations of
+    ~10^7-10^8 members — OSM's largest PT relations are ~10^3-10^4 and
+    a 10^5-member relation is covered by test.
+    """
+    body = partial(_validate_rows, ignore=frozenset(int(w) for w in ignore_ways))
+    return rows.select("relation_id", vs.alias("vs"), ws.alias("ws")).mapInPandas(
+        body, schema=VERDICT_SCHEMA
+    )
 
 
 def validate_way_and_stop_order(
@@ -355,32 +327,11 @@ def validate_way_and_stop_order(
 ) -> DataFrame:
     """Stage 4/5/6 verdicts + stage -1 engine errors for all relations.
 
-    Plan: groupBy(relation_id).agg(sort_array(collect_list(struct)))
-    packs each relation into ONE row (hash aggregate — the required
-    distribution is part of the operator, so AQE local shuffle reads
-    cannot break co-location, unlike a bare repartition()), then a
-    single mapInPandas Arrow hop runs the automaton per row.
-
-    Batch bound: one relation = one Arrow row, so the per-row payload
-    is ~(members × mean nodes-per-way × 8B). Arrow's per-buffer limit
-    is 2 GiB per column chunk, i.e. the design holds to relations of
-    ~10^7-10^8 members — OSM's largest PT relations are ~10^3-10^4 and
-    a 10^5-member relation is covered by test. Relations are
-    independent, so a pathological input could be row-capped upstream
-    (filter size(members) > cap into the engine-error channel) without
-    touching this plan.
+    members: exploded (relation_id, member_idx, type, ref, role).
     """
-    detail = route_detail(members, ways, ignore_ways)
-    grouped = detail.groupBy("relation_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "member_idx", "kind", "ref", "nodes", "oneway", "ignore_oneway"
-                )
-            )
-        ).alias("ms")
-    )
-    return grouped.mapInPandas(_validate_rows, schema=VERDICT_SCHEMA)
+    rows = member_rows(members, way_elements(ways))
+    no_verdicts = F.array().cast(f"array<{VERDICT_TYPE}>")
+    return run_automaton(rows, no_verdicts, automaton_members(F.col("ms")), ignore_ways)
 
 
 def cheap_gap_prefilter(members: DataFrame, ways: DataFrame) -> DataFrame:

@@ -106,17 +106,17 @@ def test_stop_order_gated_on_way_errors(spark, dims):
 
 
 def test_ptv2_gate_short_circuits(spark, dims):
-    rows = [
-        relation_row(9300, way_members(1, 3), route_tags(**{"public_transport:version": "1"}))
-    ]
+    v1 = route_tags(**{"public_transport:version": "1"})
+    # 9302 has no members: it still gets its gate verdict
+    rows = [relation_row(9300, way_members(1, 3), v1), relation_row(9302, [], v1)]
     verdicts, _ = run_routes(spark, dims, rows)
-    got = sorted_verdicts(verdicts)
-    assert got == [
-        (
-            "https://www.openstreetmap.org/relation/9300",
-            "tag 'public_transport:version' should have value '2'",
-        )
-    ]
+    for rid in (9300, 9302):
+        assert sorted_verdicts(verdicts, rid) == [
+            (
+                f"https://www.openstreetmap.org/relation/{rid}",
+                "tag 'public_transport:version' should have value '2'",
+            )
+        ]
 
 
 def test_re_tags_missing_and_wrong_type(spark, dims):
@@ -179,12 +179,27 @@ def test_member_order_cases(spark, dims):
                 ("https://www.openstreetmap.org/way/1", "element has unexpected role 'forward'"),
             ],
         ),
+        # no members at all: the relation keeps its row
+        (
+            9407,
+            [],
+            [
+                ("", "route does not contain a stop/platform"),
+                ("", "route does not contain any route ways"),
+            ],
+        ),
     ]
     rows = [relation_row(rid, ms, route_tags()) for rid, ms, _ in cases]
-    verdicts, _ = run_routes(spark, dims, rows)
+    verdicts, _ = run_routes(spark, dims, rows, ValidationConfig(minimum_node_members=1))
     for rid, _ms, expected in cases:
         got = sorted_verdicts(verdicts.filter(F.col("stage_no") == 2), rid)
         assert got == expected, rid
+    assert sorted_verdicts(verdicts.filter(F.col("stage_no") == 7), 9407) == [
+        (
+            "https://www.openstreetmap.org/relation/9407",
+            "relation does not have enough node members",
+        )
+    ]
 
 
 def test_member_order_stop_after_route_platform(spark, dims):
@@ -238,27 +253,37 @@ def test_node_checks_platform_and_stop(spark, dims):
 
 def test_missing_node_aborts_later_stages(spark, dims):
     nodes, ways = dims
-    ms = [
-        member("node", 99999, "stop"),
-        member("node", 100, "stop"),
-        member("way", 1),
-        member("way", 3),
-        member("way", 77777),
+    route_ways = [member("way", 1), member("way", 3), member("way", 77777)]
+    cases = [
+        # (id, node members, the missing node, expected verdicts)
+        (9501, [member("node", 99999, "stop"), member("node", 100, "stop")], 99999, []),
+        # the reference loads EVERY node member before it looks at roles
+        # (nodes.go:15-20): a missing role-"" node aborts too, and its
+        # stage-2 verdict survives
+        (
+            9503,
+            [member("node", 100, "stop"), member("node", 99998, "")],
+            99998,
+            [("https://www.openstreetmap.org/node/99998", "stop/platform with empty role")],
+        ),
     ]
-    rels = relations_df(spark, [relation_row(9501, ms, route_tags())])
+    rels = relations_df(
+        spark,
+        [relation_row(rid, ms + route_ways, route_tags()) for rid, ms, _, _ in cases],
+    )
     verdicts, errors = validate_route_relations(
         rels, nodes, ways, ValidationConfig(minimum_node_members=5)
     )
-    errs = [(r.relation_id, r.message) for r in errors.collect()]
+    errs = sorted((r.relation_id, r.message) for r in errors.collect())
     # the node-load error aborts before any way is loaded: no
     # "failed to load way 77777" (stage -1 is filtered with stages 3-7)
-    assert errs == [(9501, "failed to load node 99999")]
+    assert errs == [(rid, f"failed to load node {ref}") for rid, _, ref, _ in cases]
     # stages 3+ discarded (route_relation.go:29-33): ways 1,3 have a gap
     # and 2 node members < 5 would fail stage 7, but neither may be
-    # reported. Stages 0-2 are clean for this relation, so it ends with
-    # zero verdicts, only the engine error.
+    # reported. Only the stage 0-2 verdicts and the engine error remain.
     assert verdicts.filter(F.col("stage_no") >= 3).count() == 0
-    assert sorted_verdicts(verdicts, 9501) == []
+    for rid, _ms, _ref, expected in cases:
+        assert sorted_verdicts(verdicts, rid) == expected, rid
 
 
 def test_missing_way_engine_error_and_stop_fallout(spark, dims):

@@ -206,6 +206,13 @@ def test_validate_all_no_route_dedup_shuffle(spark, tmp_path):
         rels.filter(F.col("relation_id") == 1), nodes, ways
     )
     assert rows(once), "the shared route must have verdicts to count"
+
+    # one row per relation: each table is scanned once, and one
+    # MapInPandas emits every verdict
+    plan = plan_of(once)
+    scanned = re.findall(r"^Location: \w+ \[\S*/(\w+)\]", plan, re.M)
+    assert sorted(scanned) == ["nodes", "relations", "ways"], plan
+    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1, plan
     assert rows(verdicts) == rows(once)
 
     # a work list holding master 9 and its member route 1: route 1 is
@@ -272,15 +279,19 @@ def test_knn_non_broadcast_path_is_salted(spark):
 
 
 def test_dim_joins_broadcast_small_and_hash_large(spark, tmp_path):
-    """The validator dim joins carry NO join hint (a SHUFFLE_HASH hint
-    resolves before size-based selection and would forgo broadcast even
-    for a 10-row dim). Intended ladder: small parquet-backed dim (the
-    deployment shape, with size stats) -> BroadcastHashJoin; broadcast
-    disabled (stand-in for a huge dim) -> ShuffledHashJoin via
-    preferSortMergeJoin=false, NOT SortMergeJoin."""
+    """The member ⋈ element join (nodes ∪ ways, keyed by type and ref)
+    carries NO join hint (a SHUFFLE_HASH hint resolves before size-based
+    selection and would forgo broadcast even for a 10-row dim). Intended
+    ladder: small parquet-backed dim (the deployment shape, with size
+    stats) -> BroadcastHashJoin; broadcast disabled (stand-in for a huge
+    dim) -> ShuffledHashJoin via preferSortMergeJoin=false, NOT
+    SortMergeJoin."""
     from osm_pt_validator_spark.fixtures import nodes_df, ways_df
-    from osm_pt_validator_spark.operators.node_checks import _checked_node_members
-    from osm_pt_validator_spark.operators.way_order import route_detail
+    from osm_pt_validator_spark.operators.members import (
+        member_rows,
+        node_elements,
+        way_elements,
+    )
 
     members = spark.range(200_000).select(
         F.col("id").alias("relation_id"),
@@ -294,26 +305,46 @@ def test_dim_joins_broadcast_small_and_hash_large(spark, tmp_path):
     nodes = spark.read.parquet(str(tmp_path / "nodes.parquet"))
     ways = spark.read.parquet(str(tmp_path / "ways.parquet"))
 
-    for df in (_checked_node_members(members, nodes),
-               route_detail(members, ways)):
-        plan = plan_of(df)
-        assert "BroadcastHashJoin" in plan, plan
-        assert "SortMergeJoin" not in plan, plan
+    def joined():
+        return member_rows(members, node_elements(nodes), way_elements(ways))
 
-    # a threshold below the dims' size stats (~7-8 KB here) rules out
-    # broadcast, while the SHJ gate (size < threshold * partitions)
-    # still admits them — i.e. the "dim too big to broadcast but
+    plan = plan_of(joined())
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+
+    # half the dim's size estimate (~40 KB here: the projected columns'
+    # default sizes inflate the two tables' ~15 KB of files) rules out
+    # broadcast, while the SHJ gate (size < threshold * 4 partitions)
+    # still admits it — i.e. the "dim too big to broadcast but
     # partition-small" regime where preferSortMergeJoin=false matters
+    dim = node_elements(nodes).unionByName(way_elements(ways), allowMissingColumns=True)
+    estimate = dim._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4000")
-        for df in (_checked_node_members(members, nodes),
-                   route_detail(members, ways)):
-            plan = plan_of(df)
-            assert "ShuffledHashJoin" in plan, plan
-            assert "SortMergeJoin" not in plan, plan
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(estimate // 2))
+        plan = plan_of(joined())
+        assert "ShuffledHashJoin" in plan, plan
+        assert "SortMergeJoin" not in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_bigram_lm_tables_broadcast(spark):
+    """bigram_lm_scores: at fixture scale both vocabulary-bounded LM
+    tables (bigram counts, prefix counts) join the doc side by
+    broadcast, never by sort-merge."""
+    import re
+
+    from osm_pt_validator_spark.operators.text import bigram_lm_scores
+
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    target = docs.filter(F.col("doc_id") % 10 == 0)
+    plan = plan_of(bigram_lm_scores(docs, target))
+    # the 1-row vocabulary frame is crossJoined (a nested-loop join);
+    # the two equi-joins on g and w1 are the LM tables
+    assert len(re.findall(r"^\(\d+\) BroadcastHashJoin", plan, re.M)) == 2, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
 
 
 def test_exact_dedup_single_scan_single_shuffle(spark):
