@@ -1,12 +1,13 @@
-"""Per-stage checkpoint / resume with per-partition lineage + metrics.
+"""Per-stage checkpoint / resume; each stage is one write with lineage.
 
 North-rule requirement: 10^12-doc jobs must be resumable from
 checkpoints with lineage. The unit of resume is a STAGE (a materialised
-intermediate table): a stage whose `_SUCCESS` marker exists is never
-recomputed — `run_stage` short-circuits to a scan. Within a stage,
-lineage records per-partition row counts and order-insensitive
-checksums, so a resumed run can be audited against the original
-(`verify_lineage`).
+intermediate table). A stage is committed by its manifest
+(`<stage>__manifest.json`), written atomically after the parquet write;
+a committed stage is never recomputed — `run_stage` short-circuits to a
+scan. The manifest records the rows and the order-insensitive checksum
+of what was sent to the writer, observed on the write itself, so a
+resumed run can be audited against the original (`verify_lineage`).
 
 On a real deployment the checkpoint root is an Iceberg/S3 prefix; the
 mechanism below is pure Spark API and works identically on local paths.
@@ -19,38 +20,37 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-
-def _lineage_path(root: str, stage: str) -> str:
-    return os.path.join(root, f"{stage}__lineage")
 
 
 def _stage_path(root: str, stage: str) -> str:
     return os.path.join(root, stage)
 
 
+def _manifest_path(root: str, stage: str) -> str:
+    return os.path.join(root, f"{stage}__manifest.json")
+
+
 def stage_complete(root: str, stage: str) -> bool:
-    return os.path.exists(os.path.join(_stage_path(root, stage), "_SUCCESS"))
+    """Committed (manifest written) and its data still on disk."""
+    return os.path.exists(_manifest_path(root, stage)) and os.path.exists(
+        os.path.join(_stage_path(root, stage), "_SUCCESS")
+    )
+
+
+def _digest(df: DataFrame) -> tuple[Column, Column]:
+    """(rows, checksum) aggregates over df. The checksum is an
+    order-insensitive XOR of xxhash64 over all columns: stable under row
+    order and partitioning, sensitive to any value change, and
+    overflow-free under ANSI mode. NULL over zero rows."""
+    h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
+    return F.count(F.lit(1)).alias("rows"), F.bit_xor(h).alias("checksum")
 
 
 def compute_lineage(df: DataFrame) -> DataFrame:
-    """(partition_id, rows, checksum) — checksum is an order-insensitive
-    XOR of xxhash64 over all columns: stable under row order, sensitive
-    to any value change, and overflow-free under ANSI mode."""
-    cols = [F.col(c).cast("string") for c in df.columns]
-    return (
-        df.select(
-            F.spark_partition_id().alias("partition_id"),
-            F.xxhash64(*cols).alias("h"),
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.bit_xor("h").alias("checksum"),
-        )
-    )
+    """(partition_id, rows, checksum): the digest per input partition."""
+    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(*_digest(df))
 
 
 def run_stage(
@@ -61,37 +61,35 @@ def run_stage(
 ) -> DataFrame:
     """Compute-or-resume a stage.
 
-    * resume: `_SUCCESS` present -> return the materialised scan
+    * resume: committed (see stage_complete) -> return the materialised scan
       (no recompute; downstream stages read columnar parquet with
       pushdown intact).
-    * compute: materialise df_fn() to parquet, record lineage (per
-      partition) and a manifest (wall time, row count).
+    * compute: materialise df_fn() to parquet in one write that also
+      observes its rows and checksum, then commit the manifest
+      (wall time, rows, checksum).
     """
     path = _stage_path(root, stage)
     if stage_complete(root, stage):
         return spark.read.parquet(path)
 
+    manifest_path = _manifest_path(root, stage)
+    if os.path.exists(manifest_path):  # its data went missing: uncommit first
+        os.remove(manifest_path)
     t0 = time.time()
     df = df_fn()
-    df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-
-    lineage = compute_lineage(out)
-    lineage.write.mode("overwrite").parquet(_lineage_path(root, stage))
-
-    manifest = {
-        "stage": stage,
-        "seconds": round(time.time() - t0, 3),
-        "rows": out.count(),
-    }
-    with open(os.path.join(root, f"{stage}__manifest.json"), "w") as f:
+    obs = Observation()
+    df.observe(obs, *_digest(df)).write.mode("overwrite").parquet(path)
+    manifest = {"stage": stage, "seconds": round(time.time() - t0, 3), **obs.get}
+    with open(manifest_path + ".tmp", "w") as f:
         json.dump(manifest, f)
-    return out
+    os.replace(manifest_path + ".tmp", manifest_path)
+    return spark.read.parquet(path)
 
 
 def stage_manifests(root: str) -> dict[str, dict]:
     """The stage manifests run_stage wrote under root, by stage name:
-    {"stage", "seconds", "rows"} each. Plain file reads, no Spark job."""
+    {"stage", "seconds", "rows", "checksum"} each. Plain file reads, no
+    Spark job."""
     out = {}
     for fn in sorted(os.listdir(root)):
         if fn.endswith("__manifest.json"):
@@ -101,28 +99,12 @@ def stage_manifests(root: str) -> dict[str, dict]:
     return out
 
 
-def stage_metrics(spark: SparkSession, root: str) -> DataFrame:
-    """The run's metrics table: one row per completed stage (name, wall
-    seconds, output rows) assembled from the stage manifests. On a real
-    deployment this is the table an orchestrator reads to spot the slow
-    stage of a resumed 10^12-doc job."""
-    rows = [
-        (m["stage"], float(m["seconds"]), int(m["rows"]))
-        for m in stage_manifests(root).values()
-    ]
-    return spark.createDataFrame(rows, "stage string, seconds double, rows long")
-
-
 def verify_lineage(spark: SparkSession, root: str, stage: str) -> bool:
-    """Audit a materialised stage against its recorded lineage: total
-    rows and the global checksum must match (partition boundaries may
-    differ after a re-read, so compare the order-insensitive totals)."""
+    """Audit a materialised stage against its manifest: the rows and the
+    checksum of the stage on disk must equal those observed on its write
+    (order-insensitive, so partition boundaries may differ)."""
     df = spark.read.parquet(_stage_path(root, stage))
-    recorded = spark.read.parquet(_lineage_path(root, stage))
-    cur = compute_lineage(df).agg(
-        F.sum("rows").alias("rows"), F.bit_xor("checksum").alias("checksum")
-    ).collect()[0]
-    rec = recorded.agg(
-        F.sum("rows").alias("rows"), F.bit_xor("checksum").alias("checksum")
-    ).collect()[0]
-    return (cur.rows, cur.checksum) == (rec.rows, rec.checksum)
+    cur = df.agg(*_digest(df)).first()
+    with open(_manifest_path(root, stage)) as f:
+        rec = json.load(f)
+    return (cur.rows, cur.checksum) == (rec["rows"], rec["checksum"])

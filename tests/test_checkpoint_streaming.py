@@ -35,16 +35,70 @@ def test_stage_checkpoint_resume_and_lineage(spark, tmp_path):
 
     assert verify_lineage(spark, root, "stage1")
 
-    from osm_pt_validator_spark.plans.checkpoint import stage_metrics
+    from osm_pt_validator_spark.plans.checkpoint import stage_manifests
 
-    m = {r.stage: (r.seconds, r.rows) for r in stage_metrics(spark, root).collect()}
-    assert m["stage1"][1] == 1000 and m["stage1"][0] > 0
+    m = stage_manifests(root)
+    assert m["stage1"]["rows"] == 1000 and m["stage1"]["seconds"] > 0
 
     # tamper: rewrite the stage with one row missing -> lineage fails
     spark.range(0, 999).withColumn("v", F.col("id") * 2).write.mode(
         "overwrite"
     ).parquet(os.path.join(root, "stage1"))
     assert not verify_lineage(spark, root, "stage1")
+
+    # tamper: same 1000 rows, one value changed -> the checksum catches it
+    spark.range(0, 1000).withColumn(
+        "v", F.when(F.col("id") == 7, F.lit(-1)).otherwise(F.col("id") * 2)
+    ).write.mode("overwrite").parquet(os.path.join(root, "stage1"))
+    assert not verify_lineage(spark, root, "stage1")
+
+    # a 0-row stage commits, audits and resumes like any other
+    calls["n"] = 0
+
+    def build_empty():
+        calls["n"] += 1
+        return spark.range(0).withColumn("v", F.col("id") * 2)
+
+    assert run_stage(spark, root, "empty", build_empty).count() == 0
+    assert stage_manifests(root)["empty"]["rows"] == 0
+    assert verify_lineage(spark, root, "empty")
+    assert run_stage(spark, root, "empty", build_empty).count() == 0
+    assert calls["n"] == 1
+
+
+def test_fresh_stage_is_one_write(spark, tmp_path):
+    """A computed stage costs its write plus the read-back's schema job:
+    rows and checksum ride the write, and they equal the lineage of the
+    stage read back."""
+    from osm_pt_validator_spark.plans.checkpoint import (
+        compute_lineage,
+        run_stage,
+        stage_manifests,
+    )
+
+    root = str(tmp_path / "ckpt1")
+    os.makedirs(root, exist_ok=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh_stage", "fresh_stage")
+    try:
+        out = run_stage(
+            spark, root, "s", lambda: spark.range(0, 5000, numPartitions=4).withColumn(
+                "v", (F.col("id") % 7).cast("string")
+            )
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("fresh_stage")
+    assert 1 <= len(jobs) <= 2, jobs
+
+    lin = compute_lineage(out).agg(
+        F.sum("rows").alias("rows"), F.bit_xor("checksum").alias("checksum")
+    ).first()
+    m = stage_manifests(root)["s"]
+    assert (m["rows"], m["checksum"]) == (lin.rows, lin.checksum)
+    assert m["rows"] == 5000
 
 
 def test_kill_and_resume_recomputes_only_missing_stage(spark, tmp_path):
@@ -73,6 +127,12 @@ def test_kill_and_resume_recomputes_only_missing_stage(spark, tmp_path):
     shutil.rmtree(os.path.join(root, "s2"))
     pipeline()
     assert calls == {"s1": 1, "s2": 2}  # s1 resumed, s2 recomputed
+    # a crash after s2's write but before its manifest commit: _SUCCESS
+    # alone does not mark the stage complete
+    os.remove(os.path.join(root, "s2__manifest.json"))
+    pipeline()
+    assert calls == {"s1": 1, "s2": 3}
+    assert os.path.exists(os.path.join(root, "s2__manifest.json"))
 
 
 def test_streaming_tile_heatmap(spark, tmp_path):

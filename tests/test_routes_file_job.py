@@ -390,9 +390,9 @@ def test_iceberg_source_gating_and_fallback(spark, tmp_path):
 def test_job_gone_worklist_id_also_master_member_single_verdict(spark, tmp_path):
     """A missing relation id that is BOTH on the work list and a member
     of a present route master must get exactly ONE 'relation no longer
-    exists' verdict — the jobs-level gone set supplies it and
-    validate_all's master-member gone path excludes work-list ids
-    (gone_handled) rather than double-emitting."""
+    exists' verdict — validate_all checks presence once, over the
+    distinct union of work-list ids and master-listed ids, rather than
+    double-emitting."""
     from osm_pt_validator_spark.fixtures import member, relation_row
     from osm_pt_validator_spark.jobs import main
 
