@@ -34,8 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
 
-    from pyspark.storagelevel import StorageLevel
-
     from osm_pt_validator_spark.config import DEFAULT_CONFIG, ValidationConfig
     from osm_pt_validator_spark.operators.pipeline import collect_invalid, validate_all
     from osm_pt_validator_spark.plans.checkpoint import run_stage, stage_manifests
@@ -70,9 +68,6 @@ def main(argv: list[str] | None = None) -> int:
         for cfg, files in sorted(by_cfg.items(), key=lambda kv: kv[1]):
             work_sets.append((cfg, worklist.filter(F.col("source_file").isin(files))))
     else:
-        # every validate_all branch reads the whole table: compute it
-        # once. A work-list run reads few rows of it, so it scans instead.
-        relations = relations.persist(StorageLevel.MEMORY_AND_DISK)
         work_sets.append((DEFAULT_CONFIG, None))
 
     def _validate():

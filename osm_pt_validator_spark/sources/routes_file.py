@@ -8,6 +8,9 @@ listing (cmd/trigger/main.go:86-151). Spark's native globbing replaces
 the S3 pagination loop: pass a directory/glob and every file becomes
 rows of one work-list DataFrame.
 
+Reading is strict, as Go's typed unmarshalling is: any schema violation
+fails the whole read, and ids and counts must be JSON integers
+(``9001.5`` and ``1e3`` are floats, rejected rather than truncated).
 Rows with ``relation_id < 1`` or ``skip`` are dropped (F6,
 scripts/validate/main.go:82-84; cmd/trigger/main.go:143-147).
 """
@@ -51,22 +54,33 @@ class RoutesFileError(ValueError):
         )
 
 
-_CONFIG_KEYS = {
-    # schema/routefile.schema.json:10-29 — the four config properties
-    "naptanPlatformTags": bool,
-    "minimumNodeMembers": (int, float),
-    "ignoreTraversalDirectionWays": list,
-    "minimumRouteVariants": (int, float),
+def _is_int(v: object) -> bool:
+    """A JSON integer that fits Go's int64 (a bool is not one)."""
+    return isinstance(v, int) and not isinstance(v, bool) and -(2**63) <= v < 2**63
+
+
+#: JSON config key -> (ValidationConfig field, JSON type, check): the four
+#: properties of schema/routefile.schema.json:10-29, typed as
+#: pkg/validation/config.go:3-9 unmarshals them
+_CONFIG = {
+    "naptanPlatformTags": ("naptan_platform_tags", "a boolean", lambda v: isinstance(v, bool)),
+    "minimumNodeMembers": ("minimum_node_members", "an integer", _is_int),
+    "ignoreTraversalDirectionWays": (
+        "ignore_traversal_direction_ways",
+        "an array of integers",
+        lambda v: isinstance(v, list) and all(map(_is_int, v)),
+    ),
+    "minimumRouteVariants": ("minimum_route_variants", "an integer", _is_int),
 }
 
 
 def validate_routes_doc(doc: object, source: str) -> list[str]:
     """Schema-contract check of one parsed manifest
     (schema/routefile.schema.json:33-64): required top-level `routes`,
-    no unknown top-level/config/route keys, typed config values, and
-    per-route required `name` (string) + `relation_id` (number),
-    optional `comment` (string) / `skip` (boolean). Returns human-
-    readable problems; empty list = valid."""
+    no unknown top-level/config/route keys, config values typed per
+    ``_CONFIG``, and per-route required `name` (string) + `relation_id`
+    (integer), optional `comment` (string) / `skip` (boolean). Returns
+    human-readable problems; empty list = valid."""
     errs: list[str] = []
     if not isinstance(doc, dict):
         return [f"{source}: top level must be an object"]
@@ -80,20 +94,10 @@ def validate_routes_doc(doc: object, source: str) -> list[str]:
         errs.append(f"{source}: 'config' must be an object")
     elif cfg:
         for k, v in cfg.items():
-            want = _CONFIG_KEYS.get(k)
-            if want is None:
+            if k not in _CONFIG:
                 errs.append(f"{source}: unknown config key {k!r}")
-            elif want is bool and not isinstance(v, bool):
-                errs.append(f"{source}: config.{k} must be a boolean")
-            elif want is list and (
-                not isinstance(v, list)
-                or any(isinstance(x, bool) or not isinstance(x, (int, float)) for x in v)
-            ):
-                errs.append(f"{source}: config.{k} must be an array of numbers")
-            elif want == (int, float) and (
-                isinstance(v, bool) or not isinstance(v, (int, float))
-            ):
-                errs.append(f"{source}: config.{k} must be a number")
+            elif not _CONFIG[k][2](v):
+                errs.append(f"{source}: config.{k} must be {_CONFIG[k][1]}")
     routes = doc.get("routes")
     if routes is not None and not isinstance(routes, dict):
         errs.append(f"{source}: 'routes' must be an object of groups")
@@ -109,9 +113,8 @@ def validate_routes_doc(doc: object, source: str) -> list[str]:
 
 
 def _entry_problems(r: object) -> list[str]:
-    """Problems for ONE route entry (schema/routefile.schema.json:38-61)
-    — shared by the whole-file validator and the non-strict row loop so
-    'malformed' means the same thing on both paths."""
+    """Problems for ONE route entry (schema/routefile.schema.json:38-61);
+    `relation_id` must be an integer, as Go's int64 is."""
     if not isinstance(r, dict):
         return [" must be an object"]
     errs = []
@@ -120,9 +123,8 @@ def _entry_problems(r: object) -> list[str]:
             errs.append(f": unknown key {k!r}")
     if not isinstance(r.get("name"), str):
         errs.append(": 'name' is required and must be a string")
-    rid = r.get("relation_id")
-    if isinstance(rid, bool) or not isinstance(rid, (int, float)):
-        errs.append(": 'relation_id' is required and must be a number")
+    if not _is_int(r.get("relation_id")):
+        errs.append(": 'relation_id' is required and must be an integer")
     if "comment" in r and not isinstance(r["comment"], str):
         errs.append(": 'comment' must be a string")
     if "skip" in r and not isinstance(r["skip"], bool):
@@ -131,19 +133,16 @@ def _entry_problems(r: object) -> list[str]:
 
 
 def parse_config(raw: dict) -> ValidationConfig:
-    """JSON config block -> ValidationConfig (config.go:3-13 keys)."""
+    """A valid JSON config block -> ValidationConfig; absent keys keep
+    the dataclass defaults. The ignore list becomes a tuple: jobs.main
+    groups work sets by config value, so the config must hash."""
     return ValidationConfig(
-        naptan_platform_tags=bool(raw.get("naptanPlatformTags", False)),
-        minimum_node_members=int(raw.get("minimumNodeMembers", 0)),
-        ignore_traversal_direction_ways=tuple(
-            raw.get("ignoreTraversalDirectionWays", []) or []
-        ),
-        minimum_route_variants=int(raw.get("minimumRouteVariants", 0)),
+        **{_CONFIG[k][0]: tuple(v) if isinstance(v, list) else v for k, v in raw.items()}
     )
 
 
 def read_routes_files(
-    spark: SparkSession, path_or_glob: str, strict: bool = True
+    spark: SparkSession, path_or_glob: str
 ) -> tuple[DataFrame, dict[str, ValidationConfig]]:
     """Read one or many RoutesFiles.
 
@@ -153,21 +152,15 @@ def read_routes_files(
     the reference's trigger lambda does the same S3-side).
 
     Every manifest is checked against the schema contract first
-    (validate_routes_doc); by default a violation raises
-    RoutesFileError enumerating every problem in every file — a typo'd
-    manifest must fail the job, not silently null-filter rows (the
-    behaviour Go's typed unmarshalling gives the reference). Pass
-    strict=False to instead drop malformed route entries after the
-    problems are reported on stderr.
+    (validate_routes_doc); any violation raises RoutesFileError
+    enumerating every problem in every file, and nothing is read — a
+    typo'd manifest must fail the job, not silently drop or truncate
+    rows (the behaviour Go's typed unmarshalling gives the reference).
     """
-    import sys
-
     if os.path.isdir(path_or_glob):
         paths = sorted(glob.glob(os.path.join(path_or_glob, "**", "*.json"), recursive=True))
     else:
         paths = sorted(glob.glob(path_or_glob))
-    rows: list[tuple] = []
-    configs: dict[str, ValidationConfig] = {}
     problems: list[str] = []
     docs: list[tuple[str, dict]] = []
     for p in paths:
@@ -178,40 +171,16 @@ def read_routes_files(
                 problems.append(f"{p}: not valid JSON ({exc})")
                 continue
         problems.extend(validate_routes_doc(doc, p))
-        docs.append((p, doc if isinstance(doc, dict) else {}))
+        docs.append((p, doc))
     if problems:
-        if strict:
-            raise RoutesFileError(problems)
-        print(
-            f"routes_file: dropping {len(problems)} malformed entr(ies):\n  "
-            + "\n  ".join(problems),
-            file=sys.stderr,
-        )
-    for p, doc in docs:
-        try:
-            configs[p] = parse_config(doc.get("config", {}) or {})
-        except (TypeError, ValueError):
-            # only reachable in non-strict mode (strict raised above);
-            # the problem was already reported — degrade to defaults
-            configs[p] = ValidationConfig()
-        routes = doc.get("routes", {})
-        if not isinstance(routes, dict):
-            continue
-        for group, entries in routes.items():
-            if not isinstance(entries, list):
-                continue
-            for r in entries:
-                if _entry_problems(r):
-                    continue  # non-strict: reported above, dropped here
-                rows.append(
-                    (
-                        p,
-                        group,
-                        r["name"],
-                        int(r["relation_id"]),
-                        bool(r.get("skip", False)),
-                    )
-                )
+        raise RoutesFileError(problems)
+    configs = {p: parse_config(doc.get("config") or {}) for p, doc in docs}
+    rows = [
+        (p, group, r["name"], r["relation_id"], r.get("skip", False))
+        for p, doc in docs
+        for group, entries in (doc["routes"] or {}).items()
+        for r in entries
+    ]
     df = spark.createDataFrame(rows, WORKLIST_SCHEMA)
     return df.filter((F.col("relation_id") >= 1) & ~F.col("skip")), configs
 

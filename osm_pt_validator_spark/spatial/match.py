@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from osm_pt_validator_spark.functions.geo import udeg
+from osm_pt_validator_spark.functions.geo import EARTH_RADIUS_M, udeg
 
 
 def match_candidates(
@@ -129,7 +129,7 @@ def viterbi_match(
             * math.cos(math.radians(la2))
             * math.sin(dlon / 2) ** 2
         )
-        return round(2.0 * 6371000.0 * math.asin(math.sqrt(x)) * 1000.0)
+        return round(2.0 * EARTH_RADIUS_M * math.asin(math.sqrt(x)) * 1000.0)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-EARTH_R_M = 6371000.0
+from osm_pt_validator_spark.functions.geo import EARTH_RADIUS_M
 
 
 def segments_from_polylines(
@@ -72,19 +72,7 @@ def point_to_segment_m(
     return the Euclidean distance to the clamped foot.  Degenerate
     segments (A == B) fall out naturally via the t=0 clamp guard.
     """
-    coslat = F.cos(F.radians(lat1))
-    ax = F.lit(0.0)
-    ay = F.lit(0.0)
-    bx = F.radians(lon2 - lon1) * coslat * EARTH_R_M
-    by = F.radians(lat2 - lat1) * EARTH_R_M
-    px = F.radians(plon - lon1) * coslat * EARTH_R_M
-    py = F.radians(plat - lat1) * EARTH_R_M
-    seg2 = bx * bx + by * by
-    t_raw = F.when(seg2 > 0.0, (px * bx + py * by) / seg2).otherwise(F.lit(0.0))
-    t = F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw))
-    dx = px - (ax + t * bx)
-    dy = py - (ay + t * by)
-    return F.sqrt(dx * dx + dy * dy)
+    return _segment_frame(plat, plon, lat1, lon1, lat2, lon2)["dist_m"]
 
 
 def stop_route_proximity(
@@ -134,13 +122,14 @@ def _segment_frame(
 ) -> dict[str, Column]:
     """Local-tangent-plane quantities shared by distance and chainage:
     segment vector (bx, by), point vector (px, py), clamped parametric
-    foot t, and segment length — the SAME expression spelling as
-    point_to_segment_m so oracles replay bit-for-bit."""
+    foot t, and segment length — one expression spelling for
+    point_to_segment_m and candidate_frame, so oracles replay them
+    bit-for-bit."""
     coslat = F.cos(F.radians(lat1))
-    bx = F.radians(lon2 - lon1) * coslat * EARTH_R_M
-    by = F.radians(lat2 - lat1) * EARTH_R_M
-    px = F.radians(plon - lon1) * coslat * EARTH_R_M
-    py = F.radians(plat - lat1) * EARTH_R_M
+    bx = F.radians(lon2 - lon1) * coslat * EARTH_RADIUS_M
+    by = F.radians(lat2 - lat1) * EARTH_RADIUS_M
+    px = F.radians(plon - lon1) * coslat * EARTH_RADIUS_M
+    py = F.radians(plat - lat1) * EARTH_RADIUS_M
     seg2 = bx * bx + by * by
     t_raw = F.when(seg2 > 0.0, (px * bx + py * by) / seg2).otherwise(F.lit(0.0))
     t = F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw))

@@ -455,6 +455,65 @@ def test_streaming_incremental_skips_unchanged_recrawls(spark, tmp_path):
     ]
 
 
+def test_streaming_incremental_watermark_skips_recrawl_within_delay(spark, tmp_path):
+    """The bounded-state branch: with an event-time column and a delay,
+    the gate is withWatermark + dropDuplicatesWithinWatermark, and an
+    unchanged recrawl inside the delay still adds no verdict."""
+    from pyspark.sql import types as T
+
+    from osm_pt_validator_spark.config import ValidationConfig
+    from osm_pt_validator_spark.fixtures import (
+        nodes_df,
+        relation_row,
+        relations_df,
+        route_tags,
+        stop_members,
+        way_members,
+        ways_df,
+    )
+    from osm_pt_validator_spark.schemas import RELATION_SCHEMA
+    from osm_pt_validator_spark.streaming.incremental import (
+        streaming_changed_only,
+        streaming_validate_incremental,
+    )
+
+    src = str(tmp_path / "wm_stream")
+    out = str(tmp_path / "wm_out")
+    ckpt = str(tmp_path / "wm_ckpt")
+    os.makedirs(src, exist_ok=True)
+    nodes, ways = nodes_df(spark), ways_df(spark)
+    schema = T.StructType(RELATION_SCHEMA.fields + [T.StructField("ts", T.TimestampType())])
+
+    def stream():
+        return spark.readStream.schema(schema).parquet(src + "/*")
+
+    def arrive(rows, name, minute):
+        ts = F.lit(dt.datetime(2026, 1, 1, 10, minute))
+        relations_df(spark, rows).withColumn("ts", ts).coalesce(1).write.parquet(
+            os.path.join(src, name)
+        )
+        q = streaming_validate_incremental(
+            stream(), nodes, ways, out, ckpt, config=ValidationConfig(),
+            within_watermark_col="ts", delay="1 hour",
+        )
+        q.awaitTermination()
+        return sorted((r.relation_id, r.message) for r in spark.read.parquet(out).collect())
+
+    misordered = relation_row(2, stop_members(100, 102) + way_members(1, 3), route_tags())
+    assert arrive([misordered], "b1", 0) == [(2, "ways are incorrectly ordered")]
+
+    # 20 minutes later, inside the 1 hour delay: r2 recrawled unchanged
+    # (dropped by the gate), r3 new (validated)
+    oneway = relation_row(3, stop_members(107, 110) + way_members(5, 7), route_tags())
+    assert arrive([misordered, oneway], "b2", 20) == [
+        (2, "ways are incorrectly ordered"),
+        (3, "way with oneway tag is traversed in wrong direction"),
+    ]
+
+    plan = streaming_changed_only(stream(), "ts")._jdf.queryExecution().logical().toString()
+    assert "DeduplicateWithinWatermark" in plan, plan
+
+
 def test_stream_stream_interval_join(spark, tmp_path):
     """Stream-stream enrichment: clicks joined to the impressions they
     follow within 10 minutes, both sides watermarked. availableNow over

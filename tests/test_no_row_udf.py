@@ -99,3 +99,20 @@ def test_one_module_decides_gone():
         if "relation no longer exists" in py.read_text()
     }
     assert spelled == {"operators/pipeline.py"}, spelled
+
+
+def test_routes_file_config_keys_spelled_once():
+    """Each routes-file config key is spelled once, in the table that
+    sources/routes_file.py both validates and builds ValidationConfig
+    from; a second spelling could accept a key it does not apply."""
+    src = "\n".join(py.read_text() for py in PKG.rglob("*.py"))
+    counts = {
+        k: src.count(k)
+        for k in (
+            "naptanPlatformTags",
+            "minimumNodeMembers",
+            "ignoreTraversalDirectionWays",
+            "minimumRouteVariants",
+        )
+    }
+    assert counts == dict.fromkeys(counts, 1), counts

@@ -43,7 +43,8 @@ def test_malformed_routes_file_rejected(spark, tmp_path):
     """Schema contract (routefile.schema.json:33-64): a manifest with a
     missing relation_id, a wrong-typed skip, an unknown key, and a bad
     config type must raise RoutesFileError enumerating EVERY problem —
-    not silently null-filter (r3 verdict missing-item #2)."""
+    not silently null-filter (r3 verdict missing-item #2); so must a
+    fractional id or count, not truncate it."""
     import pytest
 
     from osm_pt_validator_spark.sources.routes_file import (
@@ -76,16 +77,30 @@ def test_malformed_routes_file_rejected(spark, tmp_path):
         "unknown key 'surprise'",
         "unknown top-level key 'extraTop'",
         "unknown config key 'unknownOpt'",
-        "config.minimumNodeMembers must be a number",
+        "config.minimumNodeMembers must be an integer",
     ):
         assert frag in msg, f"missing problem: {frag}\n{msg}"
 
-    # non-strict: problems reported, malformed entries dropped, the
-    # valid rows still flow (config degrades to defaults)
-    df, configs = read_routes_files(spark, str(p), strict=False)
-    rows = sorted((r.group, r.relation_id) for r in df.collect())
-    assert [rid for _, rid in rows] == [9001]
-    assert configs[str(p)].minimum_node_members == 0
+    # ids and counts are Go int/int64 (pkg/routes/types.go:7-16,
+    # pkg/validation/config.go:3-9): a fraction or an exponent is a
+    # JSON float, rejected rather than truncated to 9001, 1000 or 2
+    r = tmp_path / "fractional.json"
+    r.write_text(
+        '{"config": {"minimumNodeMembers": 2.5, "ignoreTraversalDirectionWays": [7.5]},'
+        ' "routes": {"g": [{"name": "half", "relation_id": 9001.5},'
+        ' {"name": "exp", "relation_id": 1e3}]}}'
+    )
+    with pytest.raises(RoutesFileError) as exc:
+        read_routes_files(spark, str(r))
+    msg = str(exc.value)
+    for frag in (
+        "config.minimumNodeMembers must be an integer",
+        "config.ignoreTraversalDirectionWays must be an array of integers",
+        "routes['g'][0]: 'relation_id' is required and must be an integer",
+        "routes['g'][1]: 'relation_id' is required and must be an integer",
+    ):
+        assert frag in msg, f"missing problem: {frag}\n{msg}"
+    assert len(exc.value.problems) == 4, msg
 
     # invalid JSON is a schema problem too, not a stack trace
     q = tmp_path / "notjson.json"
@@ -475,7 +490,11 @@ def test_job_work_list_master_validates_present_members(spark, tmp_path, mode):
 
     def run(name, extra):
         out = tmp_path / name
+        jsc = spark.sparkContext._jsc
+        cached = len(jsc.getPersistentRDDs())
         rc = main(["--tables", str(tables), "--out", str(out), "--cpus", "4", *extra])
+        # the job leaves nothing cached in the caller's session
+        assert len(jsc.getPersistentRDDs()) == cached
         rows = spark.read.parquet(str(out / "verdicts")).collect()
         return rc, sorted(tuple(r) for r in rows)
 
