@@ -40,7 +40,6 @@ def shortest_paths(
     weight: str = "w_mm",
     node_col: str = "node",
     directed: bool = True,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(node, dist_mm) — minimum integer distance from ANY source node
     reachable within ``rounds`` edges. Unreached nodes are absent.
@@ -49,14 +48,12 @@ def shortest_paths(
     ``sources``: one column ``node_col``. With ``directed=False`` each
     edge also relaxes in reverse.
 
-    ``checkpoint_every``: rounds between lineage truncations (eager
-    localCheckpoint — one job each). Measured (sf0.01, warm, 3 runs):
-    per-round truncation (k=1) runs 1.8-2.1 s vs 3.6-4.0 s for k=4 —
-    materializing dist each round gives AQE exact sizes, so every
-    relax join broadcasts the (small) frontier instead of planning a
-    4-round-deep shuffle pipeline blind. k=1 stays the default; raise
-    it only when dist is too large to re-materialize per round and the
-    per-job overhead dominates (driver-far clusters)."""
+    Every round truncates the lineage (eager localCheckpoint — one job
+    each). Measured (sf0.01, warm, 3 runs): per-round truncation runs
+    1.8-2.1 s vs 3.6-4.0 s truncating every 4th round — materializing
+    dist each round gives AQE exact sizes, so every relax join
+    broadcasts the (small) frontier instead of planning a 4-round-deep
+    shuffle pipeline blind."""
     e = edges.select(
         F.col(src).alias("__s"),
         F.col(dst).alias("__d"),
@@ -77,7 +74,7 @@ def shortest_paths(
         .select("node", F.lit(0).cast("long").alias("dist_mm"))
         .localCheckpoint(eager=True)
     )
-    for r in range(1, rounds + 1):
+    for _ in range(rounds):
         relaxed = dist.join(e, dist["node"] == e["__s"]).select(
             F.col("__d").alias("node"),
             (F.col("dist_mm") + F.col("__w")).alias("dist_mm"),
@@ -86,8 +83,7 @@ def shortest_paths(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist_mm").alias("dist_mm"))
+            .localCheckpoint(eager=True)
         )
-        if r % max(checkpoint_every, 1) == 0 or r == rounds:
-            dist = dist.localCheckpoint(eager=True)
     e.unpersist()
     return dist

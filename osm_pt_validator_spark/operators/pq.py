@@ -17,9 +17,9 @@ arithmetic a DuckDB oracle replays bit-for-bit.
 
 Scale shape (the part that matters at 10^12 vectors):
 
-* **training** touches the corpus once per Lloyd round; the shuffle is
-  bounded by M x K x dim/M = K x dim longs, never the corpus (same
-  posexplode -> map-side-combining sum/count as kmeans.py);
+* **training** is kmeans.lloyd with one space per subspace: it touches
+  the corpus once per Lloyd round, and the shuffle is bounded by
+  M x K x dim/M = K x dim longs, never the corpus;
 * **encoding is ZERO-shuffle**: the full codebook set is M*K*(dim/M)
   = K*dim longs (a few KB) collapsed into ONE broadcast row, and the
   per-subspace argmin is pure column algebra (`array_sort` over a
@@ -42,16 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .kmeans import quantize
-
-
-def _sq_dist(a, b):
-    """Integer-exact squared L2 between two array<long> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+from .kmeans import lloyd, quantize, sq_dist
 
 
 def _subvectors(qv, m: int, ds: int):
@@ -60,60 +51,25 @@ def _subvectors(qv, m: int, ds: int):
 
 
 def pq_train(
-    vectors: DataFrame,
-    m: int = 4,
-    k: int = 8,
-    iters: int = 1,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: float = 1e6,
+    vectors: DataFrame, m: int = 4, k: int = 8, iters: int = 1, dim: int = 64
 ) -> DataFrame:
-    """Train M per-subspace codebooks with integer-exact Lloyd rounds.
+    """Train M per-subspace codebooks: kmeans.lloyd with one space per
+    subspace.
 
     Returns (m int, cid int, cv array<long>) — up to k codes per
     subspace (empty clusters drop out, standard Lloyd). Init: per
     subspace, the k smallest ids' subvectors, cid in id order — the
     same deterministic seed rule as kmeans.py so the oracle replays it.
+    ``iters=0`` returns those seed codebooks.
     """
     ds = dim // m
     q = vectors.select(
-        F.col(id_col).alias("id"), quantize(F.col(vec_col), scale).alias("qv")
+        F.col("vec_id").alias("id"), quantize(F.col("embedding")).alias("qv")
     )
     sub = q.select(
-        "id", F.posexplode(_subvectors(F.col("qv"), m, ds)).alias("m", "sv")
+        "id", F.posexplode(_subvectors(F.col("qv"), m, ds)).alias("m", "v")
     )
-    w = Window.partitionBy("m").orderBy("id")
-    cents = (
-        sub.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("m", (F.col("__rn") - 1).alias("cid"), F.col("sv").alias("cv"))
-    )
-    for _ in range(iters):
-        scored = sub.join(broadcast(cents), "m")
-        assigned = (
-            scored.withColumn("__d", _sq_dist(F.col("sv"), F.col("cv")))
-            .groupBy("id", "m")
-            .agg(F.min(F.struct("__d", "cid", "sv")).alias("__best"))
-            .select(
-                "m", F.col("__best.cid").alias("cid"), F.col("__best.sv").alias("sv")
-            )
-        )
-        dims = assigned.select("m", "cid", F.posexplode("sv").alias("pos", "val"))
-        cents = (
-            dims.groupBy("m", "cid", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .withColumn(
-                "cval", F.floor(F.col("s").cast("double") / F.col("n")).cast("long")
-            )
-            .groupBy("m", "cid")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "cval"))),
-                    lambda st: st["cval"],
-                ).alias("cv")
-            )
-        )
+    cents, _assigned = lloyd(sub, ("m",), k, iters)
     return cents.select(
         F.col("m").cast("int").alias("m"), F.col("cid").cast("int").alias("cid"), "cv"
     )
@@ -139,9 +95,6 @@ def pq_encode(
     codebooks: DataFrame,
     m: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: float = 1e6,
 ) -> DataFrame:
     """(id, codes array<int>) — codes[j] = argmin code of subspace j.
 
@@ -151,7 +104,7 @@ def pq_encode(
     cid, matching the oracle's ORDER BY dist, cid."""
     ds = dim // m
     q = vectors.select(
-        F.col(id_col).alias("id"), quantize(F.col(vec_col), scale).alias("qv")
+        F.col("vec_id").alias("id"), quantize(F.col("embedding")).alias("qv")
     )
     enc = q.join(broadcast(_books_row(codebooks)), how="cross")
     sub = _subvectors(F.col("qv"), m, ds)
@@ -161,7 +114,7 @@ def pq_encode(
             F.transform(
                 F.element_at(F.col("books"), j + 1),
                 lambda c: F.struct(
-                    _sq_dist(sv, c["cv"]).alias("d"), c["cid"].alias("cid")
+                    sq_dist(sv, c["cv"]).alias("d"), c["cid"].alias("cid")
                 ),
             )
         )[0]["cid"].cast("int"),
@@ -176,11 +129,6 @@ def pq_adc_topk(
     k: int = 5,
     m: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    scale: float = 1e6,
 ) -> DataFrame:
     """Top-k per query by ADC distance over PQ codes.
 
@@ -190,13 +138,9 @@ def pq_adc_topk(
     the final per-query rank (N x Q short rows). ADC is the standard
     PQ approximation: distance to the CODE of the document, not the
     document — exact integers either way, so the oracle agrees."""
-    codes = pq_encode(vectors, codebooks, m=m, dim=dim, id_col=id_col,
-                      vec_col=vec_col, scale=scale)
+    codes = pq_encode(vectors, codebooks, m=m, dim=dim)
     ds = dim // m
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        quantize(F.col(query_vec_col), scale).alias("qv"),
-    )
+    qrows = queries.select("query_id", quantize(F.col("query_vec")).alias("qv"))
     luts = (
         qrows.join(broadcast(_books_row(codebooks)), how="cross")
         .select(
@@ -204,7 +148,7 @@ def pq_adc_topk(
             F.zip_with(
                 _subvectors(F.col("qv"), m, ds),
                 F.col("books"),
-                lambda sv, book: F.transform(book, lambda c: _sq_dist(sv, c["cv"])),
+                lambda sv, book: F.transform(book, lambda c: sq_dist(sv, c["cv"])),
             ).alias("luts"),
         )
     )

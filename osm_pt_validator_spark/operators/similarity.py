@@ -8,6 +8,11 @@
     any engine, no RNG state), bucket equi-join + exact re-rank. The
     scale path: candidate set shrinks by ~2^num_planes.
   * embedding-cosine near-dup pairs for dedup pipelines.
+
+One schema: every operator reads the corpus as (vec_id, embedding) and
+queries as (query_id, query_vec). Each top-k operator only picks
+candidate (query, vector) pairs; all of them end in the same exact
+cosine re-rank, :func:`_exact_topk`.
 """
 
 from __future__ import annotations
@@ -39,36 +44,35 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def brute_force_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Exact cosine top-k per query. queries is small => broadcast;
-    the probe side streams — no shuffle until the rank window on
-    query_id (tiny). Output: (query_id, vec_id, sim, rank)."""
-    q = broadcast(queries.select(query_id_col, query_vec_col))
-    joined = embeddings.select(id_col, vec_col).crossJoin(q)
-    sim = F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
+def _exact_topk(cands: DataFrame, k: int, *keep: str) -> DataFrame:
+    """The exact re-rank every top-k operator ends in: cosine of each
+    candidate (vec_id, embedding) x (query_id, query_vec) pair rounded
+    to 6 dp, rank per query by sim desc then vec_id asc, keep rank <= k.
+    Output: (query_id, vec_id, *keep, sim, rank)."""
+    sim = F.round(cosine(F.col("embedding"), F.col("query_vec")), 6)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("vec_id").asc()
     )
     return (
-        joined.select(query_id_col, id_col, sim.alias("sim"))
+        cands.select("query_id", "vec_id", *keep, sim.alias("sim"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
 
+def brute_force_topk(
+    embeddings: DataFrame, queries: DataFrame, k: int = 5
+) -> DataFrame:
+    """Exact cosine top-k per query. queries is small => broadcast;
+    the probe side streams — no shuffle until the rank window on
+    query_id (tiny). Output: (query_id, vec_id, sim, rank)."""
+    q = broadcast(queries.select("query_id", "query_vec"))
+    return _exact_topk(embeddings.select("vec_id", "embedding").crossJoin(q), k)
+
+
 def cosine_all_pairs(
     embeddings: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_corpus_rows: int = 2_000_000,
 ) -> DataFrame:
     """Brute-force all-pairs cosine above `threshold` — the exactness
@@ -107,7 +111,7 @@ def cosine_all_pairs(
     import pandas as pd
 
     spark = embeddings.sparkSession
-    e = embeddings.select(id_col, vec_col)
+    e = embeddings.select("vec_id", "embedding")
     # fail-fast guard: probe at most max_corpus_rows+1 rows (early-stop
     # scan) rather than a full count of a table we must never collect
     probed = e.limit(max_corpus_rows + 1).count()
@@ -123,16 +127,15 @@ def cosine_all_pairs(
     out_schema = "vec_a long, vec_b long, sim double"
     if len(corpus) == 0:
         return spark.createDataFrame([], out_schema)
-    ids = corpus[id_col].to_numpy(dtype=np.int64)
-    mat = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in corpus[vec_col]], dtype=np.float64
-    )
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    normed = np.divide(
-        mat, norms[:, None], out=np.zeros_like(mat), where=norms[:, None] > 0
-    )
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(normed)
+
+    def unit_rows(vecs):
+        """float64 row matrix scaled to unit length (zero rows stay 0)."""
+        m = np.array([np.asarray(v) for v in vecs], dtype=np.float64)
+        n = np.sqrt((m * m).sum(axis=1))[:, None]
+        return np.divide(m, n, out=np.zeros_like(m), where=n > 0)
+
+    b_ids = spark.sparkContext.broadcast(corpus["vec_id"].to_numpy(dtype=np.int64))
+    b_mat = spark.sparkContext.broadcast(unit_rows(corpus["embedding"]))
 
     def gen(batches):
         bid, bnorm = b_ids.value, b_mat.value
@@ -140,13 +143,8 @@ def cosine_all_pairs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            a = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
-                dtype=np.float64,
-            )
-            an = np.sqrt((a * a).sum(axis=1))
-            a = np.divide(a, an[:, None], out=np.zeros_like(a), where=an[:, None] > 0)
+            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            a = unit_rows(pdf["embedding"])
             # corpus chunk sized so the sims block is ~4M doubles (32 MB)
             chunk = max(256, 4_000_000 // len(pdf))
             for lo in range(0, n_corpus, chunk):
@@ -218,31 +216,18 @@ def lsh_ann_topk(
     dim: int,
     k: int = 5,
     num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Approximate top-k: same-bucket candidates, exact cosine re-rank.
     Output: (query_id, vec_id, sim, rank) — rank within candidates."""
-    e = embeddings.select(id_col, vec_col).withColumn(
-        "__b", hyperplane_bucket(F.col(vec_col), dim, num_planes)
+    e = embeddings.select("vec_id", "embedding").withColumn(
+        "__b", hyperplane_bucket(F.col("embedding"), dim, num_planes)
     )
     q = broadcast(
-        queries.select(query_id_col, query_vec_col).withColumn(
-            "__b", hyperplane_bucket(F.col(query_vec_col), dim, num_planes)
+        queries.select("query_id", "query_vec").withColumn(
+            "__b", hyperplane_bucket(F.col("query_vec"), dim, num_planes)
         )
     )
-    joined = e.join(q, "__b", "inner")
-    sim = F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        joined.select(query_id_col, id_col, sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(e.join(q, "__b", "inner"), k)
 
 
 def cosine_near_dup_pairs(
@@ -250,8 +235,6 @@ def cosine_near_dup_pairs(
     threshold: float = 0.95,
     dim: int = 32,
     num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-dup: LSH bucket + exact verify.
     Output: (vec_a, vec_b, sim).
@@ -264,13 +247,15 @@ def cosine_near_dup_pairs(
     Pair count per bucket is k*(k-1)/2 either way, and an equi-join
     co-locates whole buckets on one task exactly like the groupBy, so
     the distribution is identical — minus one corpus scan."""
-    e = embeddings.select(id_col, vec_col).withColumn(
-        "__b", hyperplane_bucket(F.col(vec_col), dim, num_planes)
+    e = embeddings.select("vec_id", "embedding").withColumn(
+        "__b", hyperplane_bucket(F.col("embedding"), dim, num_planes)
     )
     # array_sort orders structs by their first field (the unique id),
     # so expansion yields vec_a < vec_b
     members = F.array_sort(
-        F.collect_list(F.struct(F.col(id_col).alias("i"), F.col(vec_col).alias("v")))
+        F.collect_list(
+            F.struct(F.col("vec_id").alias("i"), F.col("embedding").alias("v"))
+        )
     )
     pair_structs = F.flatten(
         F.transform(
@@ -307,17 +292,17 @@ def cosine_near_dup_pairs(
 
 
 def with_int8(
-    df: DataFrame, vec_col: str, q_col: str = "__q", s_col: str = "__s"
+    df: DataFrame, vec: str, q_col: str = "__q", s_col: str = "__s"
 ) -> DataFrame:
-    """Symmetric per-vector int8 scalar quantization: scale
-    s = 127/max|x| (1.0 for the zero vector), q_i = floor(x_i*s + 0.5).
+    """Symmetric per-vector int8 scalar quantization of column ``vec``:
+    scale s = 127/max|x| (1.0 for the zero vector),
+    q_i = floor(x_i*s + 0.5).
 
-    q is carried as ARRAY<DOUBLE> of integer values: every product
-    |q_i*q_j| <= 127^2 and any realistic sum stays far below 2^53, so
-    the integer dot is EXACT in doubles — and DuckDB's list_dot_product
-    replays it bit-for-bit. floor(x*s + 0.5) (round-half-up toward +inf)
-    is the same IEEE op sequence in both engines, unlike each engine's
-    round().
+    q is carried as ARRAY<BIGINT>: every product |q_i*q_j| <= 127^2 and
+    any realistic sum stays far below 2^53, so :func:`dot` of two codes
+    is EXACT in doubles — and DuckDB's list_dot_product replays it
+    bit-for-bit. floor(x*s + 0.5) (round-half-up toward +inf) is the
+    same IEEE op sequence in both engines, unlike each engine's round().
 
     The 4x memory-bandwidth win at 100 TB comes from PERSISTING the
     (q, s) columns and scanning them INSTEAD of the float vectors —
@@ -325,17 +310,56 @@ def with_int8(
     int8_quantized_topk below does for self-contained correctness
     checking) the float column is still read, so the inline win is the
     exact integer dot + map-side candidate prune, not bandwidth."""
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col(vec))
     m = F.array_max(F.transform(v, lambda x: F.abs(x)))
     out = df.withColumn(
         s_col, F.when(m > 0, F.lit(127.0) / m).otherwise(F.lit(1.0))
     )
     return out.withColumn(
-        q_col,
-        F.transform(
-            _as_double(F.col(vec_col)),
-            lambda x: F.floor(x * F.col(s_col) + F.lit(0.5)),
+        q_col, F.transform(v, lambda x: F.floor(x * F.col(s_col) + F.lit(0.5)))
+    )
+
+
+def _int8_candidates(
+    corpus: DataFrame, probes: DataFrame, limit: int, on: str | None = None
+) -> DataFrame:
+    """Each query's ``limit`` best (vec_id, embedding) candidates by
+    int8 cosine: corpus rows x broadcast probe rows (query_id,
+    query_vec), joined on ``on`` (a cross join without).
+
+    approx_cos = idot / (((s_e * s_q) * |v_e|) * |v_q|) — idot is the
+    exact integer dot (see with_int8), the denominator a fixed
+    left-associated chain of IEEE doubles, so candidate ranking is
+    engine-reproducible. The rank <= limit filter is a WindowGroupLimit
+    in Spark 3.5+: each map task keeps only its local top candidates
+    per query BEFORE the shuffle, so the exchange carries
+    O(queries * limit) rows per partition, never the corpus.
+    Output: (query_id, vec_id, embedding, query_vec, approx_sim)."""
+    e = with_int8(corpus, "embedding", "__q", "__s").withColumn(
+        "__n", norm(F.col("embedding"))
+    )
+    q = broadcast(
+        with_int8(probes, "query_vec", "__qq", "__qs").withColumn(
+            "__qn", norm(F.col("query_vec"))
+        )
+    )
+    joined = e.join(q, on) if on else e.crossJoin(q)
+    denom = ((F.col("__s") * F.col("__qs")) * F.col("__n")) * F.col("__qn")
+    approx = F.round(
+        F.when(denom > 0, dot(F.col("__q"), F.col("__qq")) / denom).otherwise(
+            F.lit(0.0)
         ),
+        6,
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("approx_sim").desc(), F.col("vec_id").asc()
+    )
+    return (
+        joined.select(
+            "query_id", "vec_id", "embedding", "query_vec", approx.alias("approx_sim")
+        )
+        .withColumn("__cr", F.row_number().over(w))
+        .filter(F.col("__cr") <= limit)
     )
 
 
@@ -344,65 +368,23 @@ def int8_quantized_topk(
     queries: DataFrame,
     k: int = 5,
     rescore: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Scalar-quantized ANN: int8 dot products pick k*rescore candidates
-    per query, an exact float64 cosine re-ranks them to the final top-k.
+    per query (:func:`_int8_candidates`, losers pruned map-side), an
+    exact float64 cosine re-ranks them to the final top-k. (Codes are
+    computed inline here; for the persisted-code scan path — the actual
+    4x-bytes win — encode with with_int8 at write time and feed the
+    stored columns in.)
 
-    approx_cos = idot / (((s_e * s_q) * |v_e|) * |v_q|) — idot is the
-    exact integer dot (see with_int8), the denominator a fixed
-    left-associated chain of IEEE doubles, so candidate ranking is
-    engine-reproducible. The rank<=k*rescore filter is a
-    WindowGroupLimit in Spark 3.5+: each map task keeps only its local
-    top candidates per query BEFORE the shuffle, so the exchange carries
-    O(queries * k * rescore) rows per partition, never the corpus.
-    (Codes are computed inline here; for the persisted-code scan path —
-    the actual 4x-bytes win — encode with with_int8 at write time and
-    feed the stored columns in.)
-
-    Output: (query_id, vec_id, rank, sim, approx_sim) — rank/sim from
+    Output: (query_id, vec_id, approx_sim, sim, rank) — sim/rank from
     the exact re-rank; approx_sim retained to measure quantization loss.
     """
-    e = with_int8(
-        embeddings.select(id_col, vec_col), vec_col, "__q", "__s"
-    ).withColumn("__n", norm(F.col(vec_col)))
-    q = broadcast(
-        with_int8(
-            queries.select(query_id_col, query_vec_col), query_vec_col, "__qq", "__qs"
-        ).withColumn("__qn", norm(F.col(query_vec_col)))
+    cands = _int8_candidates(
+        embeddings.select("vec_id", "embedding"),
+        queries.select("query_id", "query_vec"),
+        k * rescore,
     )
-    joined = e.crossJoin(q)
-    idot = F.aggregate(
-        F.zip_with(F.col("__q"), F.col("__qq"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    denom = ((F.col("__s") * F.col("__qs")) * F.col("__n")) * F.col("__qn")
-    approx = F.round(
-        F.when(denom > 0, idot / denom).otherwise(F.lit(0.0)), 6
-    )
-    wc = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sim").desc(), F.col(id_col).asc()
-    )
-    cands = (
-        joined.select(
-            query_id_col, id_col, vec_col, query_vec_col, approx.alias("approx_sim")
-        )
-        .withColumn("__cr", F.row_number().over(wc))
-        .filter(F.col("__cr") <= k * rescore)
-    )
-    sim = F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        cands.select(query_id_col, id_col, "approx_sim", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(cands, k, "approx_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -410,39 +392,39 @@ def int8_quantized_topk(
 # ---------------------------------------------------------------------------
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def _nearest_cells(
+    rows: DataFrame, key: str, vec: str, centroids: DataFrame, n: int
 ) -> DataFrame:
-    """Assign every vector to its nearest centroid (max cosine).
-
-    centroids: (centroid_id, centroid_vec) — small, broadcast. One
-    pass: broadcast cross join + rank window on the vector id, so the
-    big side never shuffles on data volume (only on the tiny per-vector
-    candidate set for the window). Output: (id, vec, centroid_id).
-    """
+    """Each row's ``n`` nearest centroids (max cosine, ties on
+    centroid_id): broadcast cross join + rank window on ``key``, so only
+    the tiny per-row candidate set shuffles. Output: (key, vec,
+    centroid_id)."""
     c = broadcast(centroids.select("centroid_id", "centroid_vec"))
-    sim = cosine(F.col(vec_col), F.col("centroid_vec"))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy(key).orderBy(
         F.col("__csim").desc(), F.col("centroid_id").asc()
     )
     return (
-        embeddings.select(id_col, vec_col)
-        .crossJoin(c)
-        .withColumn("__csim", sim)
+        rows.crossJoin(c)
+        .withColumn("__csim", cosine(F.col(vec), F.col("centroid_vec")))
         .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .select(id_col, vec_col, "centroid_id")
+        .filter(F.col("__r") <= n)
+        .select(key, vec, "centroid_id")
+    )
+
+
+def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Assign every vector to its nearest centroid (max cosine).
+
+    centroids: (centroid_id, centroid_vec) — small, broadcast.
+    Output: (vec_id, embedding, centroid_id).
+    """
+    return _nearest_cells(
+        embeddings.select("vec_id", "embedding"), "vec_id", "embedding", centroids, 1
     )
 
 
 def deterministic_centroids(
-    embeddings: DataFrame,
-    num_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, num_centroids: int = 16
 ) -> DataFrame:
     """Coarse quantizer without iterative k-means: centroid c = the
     element-wise mean of the vectors whose md5-derived id hash lands in
@@ -454,10 +436,10 @@ def deterministic_centroids(
     from osm_pt_validator_spark.functions.hashing import md5_i64
 
     cls = F.pmod(
-        md5_i64(F.col(id_col).cast("string"), salt="ivf|"), F.lit(num_centroids)
+        md5_i64(F.col("vec_id").cast("string"), salt="ivf|"), F.lit(num_centroids)
     ).alias("centroid_id")
     exploded = embeddings.select(
-        cls, F.posexplode(F.col(vec_col)).alias("dim", "x")
+        cls, F.posexplode(F.col("embedding")).alias("dim", "x")
     )
     return (
         exploded.groupBy("centroid_id", "dim")
@@ -471,51 +453,36 @@ def deterministic_centroids(
     )
 
 
+def _ivf_probes(
+    embeddings: DataFrame, queries: DataFrame, num_centroids: int, nprobe: int
+) -> tuple[DataFrame, DataFrame]:
+    """(inverted lists (vec_id, embedding, centroid_id), probe cells
+    (query_id, query_vec, centroid_id)): the index and each query's
+    ``nprobe`` nearest cells, over one broadcast centroid table."""
+    cents = deterministic_centroids(embeddings, num_centroids)
+    probes = _nearest_cells(
+        queries.select("query_id", "query_vec"), "query_id", "query_vec", cents, nprobe
+    )
+    return ivf_assign(embeddings, cents), probes
+
+
 def ivf_ann_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
     num_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF search: probe the `nprobe` nearest centroid cells per query,
     exact cosine re-rank within them.
 
     Scale shape: the index side is partitioned by centroid_id (the
     inverted lists); each query touches nprobe/num_centroids of the
-    data. The centroid table is tiny and broadcast twice (assignment +
-    probe selection). Output: (query_id, vec_id, sim, rank).
+    data; the probes (queries * nprobe rows) join by broadcast.
+    Output: (query_id, vec_id, sim, rank).
     """
-    cents = deterministic_centroids(embeddings, num_centroids, id_col, vec_col)
-    indexed = ivf_assign(embeddings, cents, id_col, vec_col)
-
-    qsim = cosine(F.col(query_vec_col), F.col("centroid_vec"))
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.col("__csim").desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        queries.select(query_id_col, query_vec_col)
-        .crossJoin(broadcast(cents))
-        .withColumn("__csim", qsim)
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select(query_id_col, query_vec_col, "centroid_id")
-    )
-
-    joined = indexed.join(broadcast(probes), "centroid_id")
-    sim = F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        joined.select(query_id_col, id_col, sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    indexed, probes = _ivf_probes(embeddings, queries, num_centroids, nprobe)
+    return _exact_topk(indexed.join(broadcast(probes), "centroid_id"), k)
 
 
 def int8_ivf_topk(
@@ -525,10 +492,6 @@ def int8_ivf_topk(
     num_centroids: int = 16,
     nprobe: int = 4,
     rescore: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF + int8 composition — the many-query production shape:
     int8 dot products are computed ONLY inside each query's nprobe
@@ -551,59 +514,11 @@ def int8_ivf_topk(
     fixed association order, round-6dp-then-rank, ties by id), so a
     DuckDB oracle replays the full chain bit-for-bit.
 
-    Output: (query_id, vec_id, rank, sim, approx_sim).
+    Output: (query_id, vec_id, approx_sim, sim, rank).
     """
-    cents = deterministic_centroids(embeddings, num_centroids, id_col, vec_col)
-    indexed = ivf_assign(embeddings, cents, id_col, vec_col)
-    coded = with_int8(indexed, vec_col, "__q", "__s").withColumn(
-        "__n", norm(F.col(vec_col))
-    )
-
-    qsim = cosine(F.col(query_vec_col), F.col("centroid_vec"))
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.col("__csim").desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        queries.select(query_id_col, query_vec_col)
-        .crossJoin(broadcast(cents))
-        .withColumn("__csim", qsim)
-        .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= nprobe)
-        .select(query_id_col, query_vec_col, "centroid_id")
-    )
-    qcoded = broadcast(
-        with_int8(probes, query_vec_col, "__qq", "__qs").withColumn(
-            "__qn", norm(F.col(query_vec_col))
-        )
-    )
-
-    joined = coded.join(qcoded, "centroid_id")
-    idot = F.aggregate(
-        F.zip_with(F.col("__q"), F.col("__qq"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    denom = ((F.col("__s") * F.col("__qs")) * F.col("__n")) * F.col("__qn")
-    approx = F.round(F.when(denom > 0, idot / denom).otherwise(F.lit(0.0)), 6)
-    wc = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sim").desc(), F.col(id_col).asc()
-    )
-    cands = (
-        joined.select(
-            query_id_col, id_col, vec_col, query_vec_col, approx.alias("approx_sim")
-        )
-        .withColumn("__cr", F.row_number().over(wc))
-        .filter(F.col("__cr") <= k * rescore)
-    )
-    sim = F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        cands.select(query_id_col, id_col, "approx_sim", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    indexed, probes = _ivf_probes(embeddings, queries, num_centroids, nprobe)
+    cands = _int8_candidates(indexed, probes, k * rescore, on="centroid_id")
+    return _exact_topk(cands, k, "approx_sim")
 
 
 def semantic_dedup(
@@ -611,8 +526,6 @@ def semantic_dedup(
     k: int = 4,
     iters: int = 2,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (public method: Abbas et al. 2023, "SemDeDup: Data-
     efficient learning at web-scale through semantic deduplication"):
@@ -634,31 +547,26 @@ def semantic_dedup(
     join marks survivors. Keep-lowest-id is the same deterministic
     survivor rule the lexical dedup family uses.
 
-    Output: (id_col, cid, kept 0/1) for EVERY input vector.
+    Output: (vec_id, cid, kept 0/1) for EVERY input vector.
     """
     from osm_pt_validator_spark.operators.kmeans import kmeans_fixed_point
 
-    _cents, assign = kmeans_fixed_point(
-        embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-    )
+    _cents, assign = kmeans_fixed_point(embeddings, k=k, iters=iters)
     member = assign.join(
-        embeddings.select(F.col(id_col).alias("id"), vec_col), "id"
+        embeddings.select(F.col("vec_id").alias("id"), "embedding"), "id"
     )
     # per-member norm computed ONCE (the pair join would otherwise
     # re-fold each vector's self-dot for every partner — 3x the fold
     # work on the quadratic term; same float ops, identical sims)
-    scored = member.withColumn("nrm", norm(F.col(vec_col)))
-    a = scored.select(
-        F.col("id").alias("id_a"),
-        F.col("cid").alias("cid_a"),
-        F.col(vec_col).alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = scored.select(
-        F.col("id").alias("id_b"),
-        F.col("cid").alias("cid_b"),
-        F.col(vec_col).alias("vb"),
-        F.col("nrm").alias("nb"),
+    scored = member.withColumn("nrm", norm(F.col("embedding")))
+    a, b = (
+        scored.select(
+            F.col("id").alias(f"id_{s}"),
+            F.col("cid").alias(f"cid_{s}"),
+            F.col("embedding").alias(f"v{s}"),
+            F.col("nrm").alias(f"n{s}"),
+        )
+        for s in "ab"
     )
     pairs = a.join(
         b,
@@ -680,7 +588,7 @@ def semantic_dedup(
     return (
         member.join(losers.withColumn("__dup", F.lit(1)), "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("vec_id"),
             F.col("cid").cast("int").alias("cid"),
             F.when(F.col("__dup").isNull(), F.lit(1))
             .otherwise(F.lit(0))

@@ -24,6 +24,10 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 
 _TOKEN_SPLIT = r"[^a-zA-Z0-9']+"
 
+# bpe_apply's ``auto`` method: the per-rule expression chain up to this
+# many merge rules, one Arrow pass above
+MAX_EXPR_RULES = 16
+
 
 def tokens(text: Column) -> Column:
     """Lowercased word tokens (whitespace+punct split, drops empties)."""
@@ -597,8 +601,6 @@ def bpe_apply(
     id_col: str = "doc_id",
     text_col: str = "text",
     method: str = "auto",
-    max_expr_rules: int = 16,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Tokenize the corpus with a TRAINED merge table — the apply half
     of the BPE loop (:func:`bpe_merges` trains the vocabulary; this is
@@ -615,16 +617,15 @@ def bpe_apply(
     Two physical strategies, identical output:
 
     * ``expr``: one per-rule array rewrite per projection — pure JVM
-      column algebra, SQL-replayable. ``checkpoint_every=1`` (the
-      default) eagerly localCheckpoints after EACH rule, exactly like
-      the trainer's rounds, and this is load-bearing, not a tuning
-      knob: chained un-materialized rewrites let Catalyst collapse the
-      projections, substituting rule k-1's whole rewrite into every
-      lambda reference of rule k — and because try_element_at
-      re-evaluates its input expression per element access, the work
-      becomes O(tokens^rules) per row (measured: 3 rules at sf0.01 went
-      from 1.8 s materialized to a >100 s hang collapsed). Right for
-      bounded rule counts (tests, oracle twins).
+      column algebra, SQL-replayable. It eagerly localCheckpoints after
+      EACH rule, exactly like the trainer's rounds, and this is
+      load-bearing, not a tuning knob: chained un-materialized rewrites
+      let Catalyst collapse the projections, substituting rule k-1's
+      whole rewrite into every lambda reference of rule k — and because
+      try_element_at re-evaluates its input expression per element
+      access, the work becomes O(tokens^rules) per row (measured: 3
+      rules at sf0.01 went from 1.8 s materialized to a >100 s hang
+      collapsed). Right for bounded rule counts (tests, oracle twins).
     * ``arrow``: ONE mapInPandas pass applying every rule per batch —
       the 100 TB shape: a production vocabulary is 10^4-10^5 rules,
       which no expression chain survives, while the Arrow pass scans
@@ -633,7 +634,7 @@ def bpe_apply(
       algebra because the trainer only emits l != r rules (matches
       cannot overlap).
 
-    ``auto`` picks expr for <= ``max_expr_rules`` rules, arrow above.
+    ``auto`` picks expr for <= ``MAX_EXPR_RULES`` rules, arrow above.
     Map-only either way — zero shuffle, pipelined with the scan.
     Output: (id_col, toks ARRAY<STRING>, n_tokens INT).
     """
@@ -643,14 +644,14 @@ def bpe_apply(
     ]
     base = documents.select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
     if method == "auto":
-        method = "expr" if len(rules) <= max_expr_rules else "arrow"
+        method = "expr" if len(rules) <= MAX_EXPR_RULES else "arrow"
     if method == "expr":
         cur = base
         for k, (l, r) in enumerate(rules, start=1):
             cur = cur.select(
                 F.col(id_col), _merge_rewrite(F.col("toks"), l, r).alias("toks")
             )
-            if checkpoint_every and k % checkpoint_every == 0 and k < len(rules):
+            if k < len(rules):
                 cur = cur.localCheckpoint(eager=True)
         out = cur
     elif method == "arrow":

@@ -19,6 +19,15 @@ Two execution shapes:
     broadcast: crossings are per-point independent, so the group key is
     (polygon_id, pmod(hash(point_id), salt_buckets)) and a hot polygon
     fans out over salt_buckets tasks instead of serializing through one.
+
+Why a numpy kernel beside spatial/polyfill.py's JVM crossing fold
+(``_crossing_parity``): the same even-odd test as a filter on that fold
+matches all four PIP/zonal/polyfill oracle keys, but it is slower on
+every size measured (local[4], median of 5): 10^5 points x a 7-vertex
+ring take 2.13 s vs 0.77 s here, and 2x10^6 points x 7 or 256 vertices
+had not finished after 900 s, against 2.55 s and 9.78 s here. The fold
+evaluates a per-edge lambda per candidate row; numpy tests a batch of
+points against all edges at once.
 """
 
 from __future__ import annotations

@@ -116,3 +116,40 @@ def test_routes_file_config_keys_spelled_once():
         )
     }
     assert counts == dict.fromkeys(counts, 1), counts
+
+
+VECTOR_SEARCH = [PKG / "operators" / f"{m}.py" for m in ("similarity", "kmeans", "pq")]
+
+
+def test_vector_search_reads_one_schema():
+    """operators/{similarity,kmeans,pq}.py read (vec_id, embedding) and
+    (query_id, query_vec) directly, in kmeans.SCALE fixed point: a
+    column-name or scale parameter would be a second schema nobody
+    passes."""
+    import ast
+
+    knobs = {"id_col", "vec_col", "query_id_col", "query_vec_col", "scale"}
+    offenders = []
+    for py in VECTOR_SEARCH:
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.Lambda)):
+                a = node.args
+                for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                    if arg.arg in knobs:
+                        offenders.append(f"{py.name}: {arg.arg}")
+    assert not offenders, offenders
+
+
+def test_vector_search_steps_spelled_once():
+    """The exact top-k re-rank (similarity._exact_topk), the integer
+    Lloyd update (kmeans.lloyd) and the integer squared distance
+    (kmeans.sq_dist) each have one spelling; a second copy could drift
+    from the oracle the first one is checked against."""
+    rerank = sum(py.read_text().count('F.col("sim").desc()') for py in VECTOR_SEARCH)
+    pkg = "\n".join(py.read_text() for py in PKG.rglob("*.py"))
+    counts = {
+        "rerank": rerank,
+        "lloyd_update": pkg.count('F.floor(F.col("s").cast("double") / F.col("n"))'),
+        "sq_dist": len(re.findall(r"def \w*sq_dist\(", pkg)),
+    }
+    assert counts == {"rerank": 1, "lloyd_update": 1, "sq_dist": 1}, counts
