@@ -16,8 +16,6 @@ from __future__ import annotations
 import argparse
 import sys
 
-from pyspark.sql import functions as F
-
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
@@ -33,6 +31,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
+    if args.relation_id is not None and args.relation_id < 1:
+        ap.error("--relation-id must be at least 1")
 
     from osm_pt_validator_spark.config import DEFAULT_CONFIG, ValidationConfig
     from osm_pt_validator_spark.operators.pipeline import collect_invalid, validate_all
@@ -47,40 +47,23 @@ def main(argv: list[str] | None = None) -> int:
     ways = spark.read.parquet(f"{args.tables}/ways.parquet")
     relations = spark.read.parquet(f"{args.tables}/relations.parquet")
 
-    # (config, requested ids) work sets over the FULL relations table:
-    # validate_all decides what is validated and what is gone. The
-    # reference builds one validator per routes file from that file's
-    # config block (scripts/validate/main.go:70-74); we group files by
-    # *config value* (ValidationConfig is a frozen dataclass) so a
-    # homogeneous routes dir still runs as a single plan.
-    work_sets: list[tuple[ValidationConfig, "object"]] = []
-    if args.relation_id:
+    # one work list over the FULL relations table: validate_all decides
+    # what is validated and what is gone. The reference builds one
+    # validator per routes file from that file's config block
+    # (scripts/validate/main.go:70-74); here each work-list row carries
+    # its own file's config, so any number of files is one plan.
+    config, requested = DEFAULT_CONFIG, None
+    if args.relation_id is not None:
         # reference -r path: Config{NaptanPlatformTags: npt}, npt
         # defaulting FALSE (scripts/validate/main.go:25-26,117)
-        cfg = ValidationConfig(naptan_platform_tags=args.naptan)
-        one = spark.range(args.relation_id, args.relation_id + 1)
-        work_sets.append((cfg, one.withColumnRenamed("id", "relation_id")))
+        config = ValidationConfig(naptan_platform_tags=args.naptan)
+        requested = spark.range(args.relation_id, args.relation_id + 1).toDF("relation_id")
     elif args.routes:
-        worklist, configs = read_routes_files(spark, args.routes)
-        by_cfg: dict[ValidationConfig, list[str]] = {}
-        for path, cfg in configs.items():
-            by_cfg.setdefault(cfg, []).append(path)
-        for cfg, files in sorted(by_cfg.items(), key=lambda kv: kv[1]):
-            work_sets.append((cfg, worklist.filter(F.col("source_file").isin(files))))
-    else:
-        work_sets.append((DEFAULT_CONFIG, None))
+        requested = read_routes_files(spark, args.routes)
 
-    def _validate():
-        parts = [
-            validate_all(relations, nodes, ways, cfg, requested=ids)[0]
-            for cfg, ids in work_sets
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    verdicts = run_stage(spark, args.out, "verdicts", _validate)
+    verdicts = run_stage(
+        spark, args.out, "verdicts", lambda: validate_all(relations, nodes, ways, config, requested)[0]
+    )
     run_stage(spark, args.out, "invalid_relations", lambda: collect_invalid(verdicts))
 
     # the summary comes from the stage manifests: no Spark action

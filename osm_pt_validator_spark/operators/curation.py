@@ -329,8 +329,6 @@ def diverse_sample(
     dim: int,
     per_bucket: int = 1,
     num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-space-balanced subsample: partition the corpus into
     2^num_planes hyperplane-LSH buckets (regions of embedding space)
@@ -349,19 +347,17 @@ def diverse_sample(
     before the exchange — the shuffle carries O(tasks * buckets *
     per_bucket) rows, not the corpus (plan-asserted in tests).
 
-    Output: (id_col, bucket, pick_rank).
+    embeddings: (vec_id, embedding). Output: (vec_id, bucket, pick_rank).
     """
     from osm_pt_validator_spark.operators.similarity import hyperplane_bucket
 
+    vec_id = F.col("vec_id")
     # a NULL id would md5 to NULL and sort FIRST in Spark's window
     # (LAST in DuckDB), stealing a representative slot — exclude it
-    b = embeddings.filter(F.col(id_col).isNotNull()).select(
-        F.col(id_col),
-        hyperplane_bucket(F.col(vec_col), dim, num_planes).alias("bucket"),
+    b = embeddings.filter(vec_id.isNotNull()).select(
+        vec_id, hyperplane_bucket(F.col("embedding"), dim, num_planes).alias("bucket")
     )
-    w = Window.partitionBy("bucket").orderBy(
-        F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc()
-    )
+    w = Window.partitionBy("bucket").orderBy(F.md5(vec_id.cast("string")).asc(), vec_id.asc())
     return b.withColumn("pick_rank", F.row_number().over(w).cast("int")).filter(
         F.col("pick_rank") <= per_bucket
     )

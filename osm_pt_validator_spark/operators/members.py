@@ -19,6 +19,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_pt_validator_spark.config import config_cols
 from osm_pt_validator_spark.functions.elements import oneway_tag
 
 #: the node tags stage 3 reads (node_checks._platform_checks/_stop_checks)
@@ -57,12 +58,13 @@ def way_elements(ways: DataFrame) -> DataFrame:
 
 def member_rows(members: DataFrame, *elements: DataFrame) -> DataFrame:
     """Join each member to the union of ``elements``; group to one row
-    per relation: relation_id, ``any_value`` of each non-member column
-    of ``members`` (e.g. the relation's tags) and ``ms``. A NULL
-    member_idx (an outer explode of an empty member list) keeps its
-    relation's row but adds no struct."""
+    per relation (and config, if carried): its keys, ``any_value`` of
+    each other non-member column (e.g. the relation's tags) and ``ms``.
+    A NULL member_idx (an outer explode of an empty member list) keeps
+    its relation's row but adds no struct."""
     dim = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), elements)
-    carried = [c for c in members.columns if c not in _MEMBER_COLS]
+    keys = ["relation_id", *config_cols(members)]
+    carried = [c for c in members.columns if c not in (*_MEMBER_COLS, *keys)]
     m = F.struct(
         "member_idx", "type", "ref", "role",
         F.coalesce("loaded", F.lit(False)).alias("loaded"),
@@ -71,7 +73,7 @@ def member_rows(members: DataFrame, *elements: DataFrame) -> DataFrame:
     joined = members.join(dim, ["type", "ref"], "left")
     # a grouping aggregate, not repartition(): the distribution is part of
     # the operator, so AQE's local shuffle reads cannot split a relation
-    return joined.groupBy("relation_id").agg(
+    return joined.groupBy(*keys).agg(
         *[F.any_value(c).alias(c) for c in carried],
         F.sort_array(F.collect_list(F.when(F.col("member_idx").isNotNull(), m))).alias("ms"),
     )

@@ -49,11 +49,11 @@ def node_load_errors(ms: Column) -> Column:
     )
 
 
-def _platform_checks(tags: Column, url: Column, naptan: bool) -> list[Column]:
+def _platform_checks(tags: Column, url: Column, naptan: Column) -> list[Column]:
     """nodes.go:44-76, in emission order."""
     pt = tags["public_transport"]
     highway = tags["highway"]
-    checks = [
+    return [
         F.when(pt.isNull(), check(url, F.lit("node is missing public_transport tag"))).when(
             pt != "platform", check(url, F.lit("node should have public_transport=platform"))
         ),
@@ -66,11 +66,11 @@ def _platform_checks(tags: Column, url: Column, naptan: bool) -> list[Column]:
             check(url, F.lit("node should have highway=bus_stop")),
         ),
         F.when(tags["name"].isNull(), check(url, F.lit("node is missing name tag"))),
+        F.when(
+            naptan & tags["naptan:AtcoCode"].isNull(),
+            check(url, F.lit("missing tag 'naptan:AtcoCode'")),
+        ),
     ]
-    if naptan:
-        no_code = tags["naptan:AtcoCode"].isNull()
-        checks.append(F.when(no_code, check(url, F.lit("missing tag 'naptan:AtcoCode'"))))
-    return checks
 
 
 def _stop_checks(tags: Column, url: Column) -> list[Column]:
@@ -86,14 +86,15 @@ def _stop_checks(tags: Column, url: Column) -> list[Column]:
     ]
 
 
-def node_verdicts(ms: Column, naptan_platform_tags: bool) -> Column:
+def node_verdicts(ms: Column, naptan_platform_tags: Column | bool) -> Column:
     """Stage-3 verdict array of the loaded stop/platform node members."""
+    naptan = F.lit(naptan_platform_tags)
 
     def member_verdicts(m: Column) -> Column:
         tags, url = m["node_tags"], element_url(F.lit("node"), m["ref"])
         checks = F.when(
             is_platform_role(m["role"]),
-            F.array(*_platform_checks(tags, url, naptan_platform_tags)),
+            F.array(*_platform_checks(tags, url, naptan)),
         ).otherwise(F.array(*_stop_checks(tags, url)))
         seq = m["member_idx"].cast("long") * _SEQ_STRIDE
         return F.transform(

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_pt_validator_spark.config import DEFAULT_CONFIG, ValidationConfig
+from osm_pt_validator_spark.config import DEFAULT_CONFIG, ValidationConfig, config_cols, with_config
 from osm_pt_validator_spark.functions.elements import (
     is_ptv2,
     relation_url,
@@ -64,6 +64,9 @@ def validate_route_relations(
     within-relation emission order.
     engine_errors: (relation_id, message) — the reference's Go-error
     channel (load failures), distinct from verdicts.
+    A relation is validated under its row's own ``config`` if it has
+    one, else under ``config``: a literal added after the member group,
+    where Catalyst folds it into the checks.
     """
     tags = F.col("tags")
     # outer explode: a relation with no members — or gated off by stage
@@ -71,26 +74,27 @@ def validate_route_relations(
     members = relations.select(
         "relation_id",
         "tags",
+        *config_cols(relations),
         F.posexplode_outer(F.when(is_ptv2(tags), F.col("members"))).alias("member_idx", "m"),
-    ).select("relation_id", "tags", "member_idx", "m.type", "m.ref", "m.role")
-    rows = member_rows(members, node_elements(nodes), way_elements(ways))
+    ).select("*", "m.*").drop("m")
+    rows = with_config(member_rows(members, node_elements(nodes), way_elements(ways)), config)
 
-    ms = F.col("ms")
+    ms, cfg = F.col("ms"), F.col("config")
     url = relation_url("relation_id")
     # a node member that fails to load discards stages 3-7 of its
     # relation, way loads included (route_relation.go:29-33)
     aborted = F.exists(ms, is_missing_node)
     stages_3_7 = F.when(aborted, node_load_errors(ms)).otherwise(
         F.concat(
-            node_verdicts(ms, config.naptan_platform_tags),
-            node_count_verdicts(ms, url, config.minimum_node_members),
+            node_verdicts(ms, cfg["naptan_platform_tags"]),
+            node_count_verdicts(ms, url, cfg["minimum_node_members"]),
         )
     )
     vs = ptv2_gate(
         tags, url, F.concat(re_tag_verdicts(tags, url), member_order_verdicts(ms), stages_3_7)
     )
-    ws = F.when(~aborted, automaton_members(ms))
-    out = run_automaton(rows, vs, ws, config.ignore_traversal_direction_ways)
+    ws = F.when(~aborted, automaton_members(ms, cfg["ignore_traversal_direction_ways"]))
+    out = run_automaton(rows, vs, ws)
     is_error = F.col("stage_no") == STAGE_ENGINE_ERROR
     return out.filter(~is_error), out.filter(is_error).select("relation_id", "message")
 
@@ -99,16 +103,17 @@ def missing_relation_verdicts(work: DataFrame, relations: DataFrame) -> DataFram
     """HTTP-410 parity: any CheckRelationEvent whose relation is gone
     gets a 'relation no longer exists' verdict — for route-master
     members AND top-level work-list ids alike
-    (cmd/validate-rm/main.go:59-63,77-96).
+    (cmd/validate-rm/main.go:59-63,77-96). Keyed by relation_id and
+    the config ``work`` may carry, as the reference's runs are.
 
     Plan shape for scale: the work list is a job manifest (small), so
     probe the big relations table with a broadcast SEMI join (no
     shuffle, relation_id column-pruned scan), then anti-join the two
     now-small id sets.
     """
-    work_ids = work.select("relation_id").distinct()
+    work_ids = work.select("relation_id", *config_cols(work)).distinct()
     present = relations.select("relation_id").join(
-        F.broadcast(work_ids), "relation_id", "left_semi"
+        F.broadcast(work_ids.select("relation_id")), "relation_id", "left_semi"
     )
     return (
         work_ids.join(present, "relation_id", "left_anti")
@@ -134,51 +139,58 @@ def validate_all(
 
     relations: the FULL relations table — master members are looked up
     in it and presence is checked against it.
-    requested: relation_ids to validate — a work list, broadcast; None
-    validates every relation.
+    requested: the work list, broadcast — relation_id, plus a
+    CONFIG_TYPE ``config`` on rows that bring their own (a routes
+    file's rows do); None validates every relation. ``config`` applies
+    to every row without one.
 
     A requested route, and every relation a requested route_master
-    lists (whatever its type, one level deep), is validated once as a
+    lists (whatever its type, one level deep), is validated once per
+    config it is listed under (a master's, for what it lists) as a
     route. Requested masters get the master checks; requested relations
     of any other type go to the engine-error channel ("unknown relation
-    type"). Each requested or master-listed id with no relation row
-    gets ONE "relation no longer exists" verdict — the HTTP-410 path
-    (cmd/validate-rm/main.go:59-63,77-96).
+    type"). Each requested or master-listed (id, config) with no
+    relation row gets ONE "relation no longer exists" verdict — the
+    HTTP-410 path (cmd/validate-rm/main.go:59-63,77-96).
     """
     rel_type = F.col("tags").getItem("type")
     is_route = F.coalesce(rel_type == "route", F.lit(False))
     chosen = relations
     if requested is not None:
-        requested = requested.select("relation_id")
-        chosen = relations.join(F.broadcast(requested), "relation_id", "left_semi")
-    masters = chosen.filter(rel_type == "route_master")
+        requested = with_config(requested, config).select("relation_id", "config").distinct()
+        chosen = relations.join(F.broadcast(requested), "relation_id")
+    masters = with_config(chosen.filter(rel_type == "route_master"), config)
     unknown = chosen.filter(rel_type.isNull() | ~rel_type.isin("route", "route_master"))
 
-    master_verdicts = validate_route_masters(masters, config.minimum_route_variants)
+    master_verdicts = validate_route_masters(masters, F.col("config.minimum_route_variants"))
 
     # split: master members become route work items, looked up in the
     # full relations table
-    listed = split_route_master_members(masters).select("relation_id")
+    listed = split_route_master_members(masters).select("relation_id", "config")
     gone = missing_relation_verdicts(
         listed if requested is None else listed.unionByName(requested), relations
     )
     # the route set as a disjoint union: every chosen route, plus every
-    # OTHER relation a master lists (a nested master is validated as a
-    # route too). A listed relation that is also a chosen route is in
-    # the first half only, so it is validated once where the reference
+    # OTHER item a master lists (a nested master is validated as a
+    # route too). A listed item that is also a chosen route is in the
+    # first half only, so it is validated once where the reference
     # would validate it twice (two SQS events) — no dedup shuffle needed.
     routes = chosen.filter(is_route)
-    listed_rels = relations.join(F.broadcast(listed), "relation_id", "left_semi")
-    all_routes = routes.unionByName(
-        listed_rels.filter(~is_route)
-        if requested is None
-        else listed_rels.join(
-            F.broadcast(routes.select("relation_id")), "relation_id", "left_anti"
+    if requested is None:
+        # every item has the literal config, which validate_route_relations
+        # adds after the member group, so that Catalyst folds it
+        others = relations.join(F.broadcast(listed), "relation_id", "left_semi").filter(
+            ~is_route
         )
-    )
+    else:
+        others = relations.join(F.broadcast(listed.distinct()), "relation_id").join(
+            F.broadcast(routes.select("relation_id", "config")),
+            ["relation_id", "config"],
+            "left_anti",
+        )
 
     route_verdicts, engine_errors = validate_route_relations(
-        all_routes, nodes, ways, config
+        routes.unionByName(others), nodes, ways, config
     )
     unknown_errors = unknown.select(
         "relation_id", F.lit("unknown relation type").alias("message")

@@ -8,9 +8,10 @@ missing name/ref/operator tags.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osm_pt_validator_spark.config import config_cols
 from osm_pt_validator_spark.functions.elements import (
     TAIL_SEQ_BASE,
     check,
@@ -34,10 +35,11 @@ MSG_NOT_ENOUGH_VARIANTS = "not enough route variants"
 
 
 def validate_route_masters(
-    relations: DataFrame, minimum_route_variants: int
+    relations: DataFrame, minimum_route_variants: Column | int
 ) -> DataFrame:
     members = F.col("members")
     url = relation_url("relation_id")
+    minimum = F.lit(minimum_route_variants)
     per_member = F.filter(
         F.transform(
             members,
@@ -48,13 +50,13 @@ def validate_route_masters(
         ),
         lambda v: v.isNotNull(),
     )
-    tail = []
-    if minimum_route_variants > 0:
-        rel_count = F.size(F.filter(members, lambda m: m["type"] == "relation"))
-        tail.append(
-            F.when(rel_count < minimum_route_variants, check(url, F.lit(MSG_NOT_ENOUGH_VARIANTS)))
-        )
-    tail.extend(missing_tag_checks(F.col("tags"), url, RM_REQUIRED_TAGS))
+    rel_count = F.size(F.filter(members, lambda m: m["type"] == "relation"))
+    tail = [
+        F.when(
+            (minimum > 0) & (rel_count < minimum), check(url, F.lit(MSG_NOT_ENOUGH_VARIANTS))
+        ),
+        *missing_tag_checks(F.col("tags"), url, RM_REQUIRED_TAGS),
+    ]
     return explode_verdicts(
         relations,
         F.concat(per_member, number_checks(STAGE_MASTER, tail, seq_base=TAIL_SEQ_BASE)),
@@ -64,12 +66,13 @@ def validate_route_masters(
 def split_route_master_members(route_masters: DataFrame) -> DataFrame:
     """O2 — every relation-type member of a route_master becomes a new
     work-list row (cmd/validate-rm/main.go:118-168; one level deep, no
-    fixpoint needed). Returns (master_id, relation_id)."""
+    fixpoint needed). Returns (master_id, relation_id), plus the
+    master's config when it carries one."""
+    cfg = config_cols(route_masters)
     return (
         route_masters.select(
-            F.col("relation_id").alias("master_id"),
-            F.explode("members").alias("m"),
+            F.col("relation_id").alias("master_id"), *cfg, F.explode("members").alias("m")
         )
         .filter(F.col("m.type") == "relation")
-        .select("master_id", F.col("m.ref").alias("relation_id"))
+        .select("master_id", F.col("m.ref").alias("relation_id"), *cfg)
     )

@@ -28,21 +28,15 @@ MSG_PTV2 = "tag 'public_transport:version' should have value '2'"
 MSG_NOT_ENOUGH = "relation does not have enough node members"
 
 
-def node_count_verdicts(members: Column, url: Column, minimum: int) -> Column:
+def node_count_verdicts(members: Column, url: Column, minimum: Column | int) -> Column:
     """A1 — validateNodeMembersCount (node_count.go:7-21);
     ``minimum < 1`` disables the check (node_count.go:9-11)."""
-    if minimum < 1:
-        return F.array().cast(f"array<{VERDICT_TYPE}>")
+    minimum = F.lit(minimum)
     node_count = F.size(F.filter(members, lambda m: m["type"] == "node"))
-    return F.filter(
-        F.array(
-            F.when(
-                node_count < minimum,
-                verdict(STAGE_NODE_COUNT, F.lit(0), url, F.lit(MSG_NOT_ENOUGH)),
-            )
-        ),
-        lambda v: v.isNotNull(),
-    )
+    return F.when(
+        (minimum >= 1) & (node_count < minimum),
+        F.array(verdict(STAGE_NODE_COUNT, F.lit(0), url, F.lit(MSG_NOT_ENOUGH))),
+    ).otherwise(F.array().cast(f"array<{VERDICT_TYPE}>"))
 
 
 def ptv2_gate(tags: Column, url: Column, checks: Column) -> Column:

@@ -27,7 +27,6 @@ stop_order_test.go.
 from __future__ import annotations
 
 from collections.abc import Iterable, Sequence
-from functools import partial
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -226,11 +225,11 @@ def run_stop_order(
 # Spark operator
 # ---------------------------------------------------------------------------
 
-def _validate_relation(rel_id: int, members: list, ignore: frozenset[int]) -> list[tuple]:
+def _validate_relation(rel_id: int, members: list) -> list[tuple]:
     """Run automaton + oneway + stop order for one relation.
 
-    members: dicts (type, ref, nodes, oneway) of its route ways and
-    stops, in member order (``automaton_members``).
+    members: dicts (type, ref, nodes, oneway, ignored) of its route ways
+    and stops, in member order (``automaton_members``).
     Returns rows (relation_id, stage_no, seq, url, message).
     """
     out: list[tuple] = []
@@ -256,6 +255,7 @@ def _validate_relation(rel_id: int, members: list, ignore: frozenset[int]) -> li
             )
             for m in ways_m
         ]
+        ignore = {int(m["ref"]) for m in ways_m if m["ignored"]}
         way_verdicts, directs, _ = run_way_order(ways, ignore)
         for i, (url, msg) in enumerate(way_verdicts):
             stage = STAGE_WAY_ORDER if msg == MSG_BAD_ORDER else STAGE_ONEWAY
@@ -271,20 +271,26 @@ def _validate_relation(rel_id: int, members: list, ignore: frozenset[int]) -> li
     return out
 
 
-def automaton_members(ms: Column) -> Column:
+def automaton_members(ms: Column, ignore_ways: Column) -> Column:
     """The automaton's input from a relation's ``ms`` (members.member_rows):
     its route ways (role '') and stop-role nodes in member order, as
-    (type, ref, nodes, oneway). A way that failed to load has NULL nodes."""
+    (type, ref, nodes, oneway, ignored). A way that failed to load has
+    NULL nodes; ``ignored`` marks one in ``ignore_ways`` (no oneway check)."""
     kept = F.filter(
         ms,
         lambda m: ((m["type"] == "way") & (m["role"] == ""))
         | ((m["type"] == "node") & is_stop_role(m["role"])),
     )
-    fields = ("type", "ref", "nodes", "oneway")
-    return F.transform(kept, lambda m: F.struct(*[m[f].alias(f) for f in fields]))
+    return F.transform(
+        kept,
+        lambda m: F.struct(
+            *[m[f].alias(f) for f in ("type", "ref", "nodes", "oneway")],
+            F.array_contains(ignore_ways, m["ref"]).alias("ignored"),
+        ),
+    )
 
 
-def _validate_rows(batches, ignore: frozenset[int]):
+def _validate_rows(batches):
     """mapInPandas body: one row per relation with its verdicts ``vs``
     and automaton input ``ws`` (NULL: stages 3-7 are aborted). A row is
     self-contained, so Arrow batch boundaries need no carry-over."""
@@ -295,15 +301,13 @@ def _validate_rows(batches, ignore: frozenset[int]):
             rel_id = int(rel_id)
             out.extend((rel_id, v["stage_no"], v["seq"], v["url"], v["message"]) for v in vs)
             if ws is not None:
-                out.extend(_validate_relation(rel_id, list(ws), ignore))
+                out.extend(_validate_relation(rel_id, list(ws)))
         yield pd.DataFrame(out, columns=cols).astype(
             {"relation_id": "int64", "stage_no": "int32", "seq": "int64"}
         )
 
 
-def run_automaton(
-    rows: DataFrame, vs: Column, ws: Column, ignore_ways: Sequence[int] = ()
-) -> DataFrame:
+def run_automaton(rows: DataFrame, vs: Column, ws: Column) -> DataFrame:
     """The one Arrow hop: every VERDICT row of ``rows`` — the verdict
     array ``vs`` passed through, then the stage 4/5/6 verdicts and
     stage -1 way-load errors of the automaton over ``ws``.
@@ -314,9 +318,8 @@ def run_automaton(
     ~10^7-10^8 members — OSM's largest PT relations are ~10^3-10^4 and
     a 10^5-member relation is covered by test.
     """
-    body = partial(_validate_rows, ignore=frozenset(int(w) for w in ignore_ways))
     return rows.select("relation_id", vs.alias("vs"), ws.alias("ws")).mapInPandas(
-        body, schema=VERDICT_SCHEMA
+        _validate_rows, schema=VERDICT_SCHEMA
     )
 
 
@@ -331,7 +334,8 @@ def validate_way_and_stop_order(
     """
     rows = member_rows(members, way_elements(ways))
     no_verdicts = F.array().cast(f"array<{VERDICT_TYPE}>")
-    return run_automaton(rows, no_verdicts, automaton_members(F.col("ms")), ignore_ways)
+    ignore = F.lit(list(ignore_ways)).cast("array<long>")
+    return run_automaton(rows, no_verdicts, automaton_members(F.col("ms"), ignore))
 
 
 def cheap_gap_prefilter(members: DataFrame, ways: DataFrame) -> DataFrame:

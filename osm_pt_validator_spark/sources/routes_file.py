@@ -20,21 +20,15 @@ from __future__ import annotations
 import glob
 import json
 import os
+from dataclasses import astuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from osm_pt_validator_spark.config import ValidationConfig
+from osm_pt_validator_spark.config import CONFIG_TYPE, ValidationConfig
 
-WORKLIST_SCHEMA = T.StructType(
-    [
-        T.StructField("source_file", T.StringType(), False),
-        T.StructField("group", T.StringType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("relation_id", T.LongType(), False),
-        T.StructField("skip", T.BooleanType(), False),
-    ]
+WORKLIST_SCHEMA = (
+    f"`group` string, name string, relation_id bigint, skip boolean, config {CONFIG_TYPE}"
 )
 
 
@@ -132,22 +126,18 @@ def _entry_problems(r: object) -> list[str]:
     return errs
 
 
-def parse_config(raw: dict) -> ValidationConfig:
-    """A valid JSON config block -> ValidationConfig; absent keys keep
-    the dataclass defaults. The ignore list becomes a tuple: jobs.main
-    groups work sets by config value, so the config must hash."""
-    return ValidationConfig(
-        **{_CONFIG[k][0]: tuple(v) if isinstance(v, list) else v for k, v in raw.items()}
-    )
+def parse_config(raw: dict) -> tuple:
+    """A valid JSON config block -> its CONFIG_TYPE row value; absent
+    keys keep the ValidationConfig defaults."""
+    return astuple(ValidationConfig(**{_CONFIG[k][0]: v for k, v in raw.items()}))
 
 
-def read_routes_files(
-    spark: SparkSession, path_or_glob: str
-) -> tuple[DataFrame, dict[str, ValidationConfig]]:
+def read_routes_files(spark: SparkSession, path_or_glob: str) -> DataFrame:
     """Read one or many RoutesFiles.
 
-    Returns (work-list DataFrame filtered per F6, {source_file:
-    ValidationConfig}). The manifest files are small (driver-side
+    Returns the work list filtered per F6: one row per route entry
+    (WORKLIST_SCHEMA), whose ``config`` is its own file's config block
+    (config.CONFIG_TYPE). The manifest files are small (driver-side
     parse is correct here — they're job *descriptions*, not data;
     the reference's trigger lambda does the same S3-side).
 
@@ -162,7 +152,7 @@ def read_routes_files(
     else:
         paths = sorted(glob.glob(path_or_glob))
     problems: list[str] = []
-    docs: list[tuple[str, dict]] = []
+    docs: list[dict] = []
     for p in paths:
         with open(p) as f:
             try:
@@ -171,18 +161,18 @@ def read_routes_files(
                 problems.append(f"{p}: not valid JSON ({exc})")
                 continue
         problems.extend(validate_routes_doc(doc, p))
-        docs.append((p, doc))
+        docs.append(doc)
     if problems:
         raise RoutesFileError(problems)
-    configs = {p: parse_config(doc.get("config") or {}) for p, doc in docs}
     rows = [
-        (p, group, r["name"], r["relation_id"], r.get("skip", False))
-        for p, doc in docs
+        (group, r["name"], r["relation_id"], r.get("skip", False), config)
+        for doc in docs
+        for config in [parse_config(doc.get("config") or {})]
         for group, entries in (doc["routes"] or {}).items()
         for r in entries
     ]
     df = spark.createDataFrame(rows, WORKLIST_SCHEMA)
-    return df.filter((F.col("relation_id") >= 1) & ~F.col("skip")), configs
+    return df.filter((F.col("relation_id") >= 1) & ~F.col("skip"))
 
 
 def parent_relations(relations: DataFrame) -> DataFrame:

@@ -157,7 +157,7 @@ def test_validate_all_no_route_dedup_shuffle(spark, tmp_path):
     go through parquet so the planner sees their sizes, as in a job."""
     import re
 
-    from osm_pt_validator_spark.config import ValidationConfig
+    from osm_pt_validator_spark.config import ValidationConfig, config_col
     from osm_pt_validator_spark.fixtures import (
         member,
         nodes_df,
@@ -223,6 +223,26 @@ def test_validate_all_no_route_dedup_shuffle(spark, tmp_path):
     plan = plan_of(listed)
     assert not re.search(r"^\(\d+\) Sort(Aggregate)?\b", plan, re.M), plan
     assert rows(listed) == rows(once)
+
+    # a work list under three distinct configs is still one plan: one
+    # member ⋈ element join, one group and one MapInPandas, and route 1
+    # (requested under two configs, listed by master 9 under a third)
+    # is validated once per config
+    def item(rid, cfg):
+        return spark.range(rid, rid + 1).toDF("relation_id").withColumn("config", config_col(cfg))
+
+    configs = [
+        ValidationConfig(),
+        ValidationConfig(naptan_platform_tags=True),
+        ValidationConfig(minimum_node_members=1, ignore_traversal_direction_ways=(7,)),
+    ]
+    work = item(9, configs[0]).unionByName(item(1, configs[1])).unionByName(item(1, configs[2]))
+    three, _ = validate_all(rels, nodes, ways, ValidationConfig(), requested=work)
+    plan = plan_of(three)
+    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1, plan
+    assert plan.count("Join type: LeftOuter") == 1, plan
+    assert len(re.findall(r"^\(\d+\) ObjectHashAggregate", plan, re.M)) == 2, plan
+    assert rows(three) == sorted(rows(once) * 3)
 
 
 def test_knn_probe_side_broadcasts_ring_dim(spark):

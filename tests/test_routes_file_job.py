@@ -30,13 +30,12 @@ def test_read_routes_files(spark, tmp_path):
 
     p = tmp_path / "routes.json"
     _write_routes_file(str(p))
-    df, configs = read_routes_files(spark, str(p))
+    df = read_routes_files(spark, str(p))
     rows = sorted((r.group, r.relation_id) for r in df.collect())
     # skip=true and relation_id=0 filtered (F6)
     assert rows == [("edinburgh", 9001), ("glasgow", 9003)]
-    cfg = configs[str(p)]
-    assert cfg.ignore_traversal_direction_ways == (7,)
-    assert not cfg.naptan_platform_tags
+    # every row carries its file's config; absent keys keep the defaults
+    assert [tuple(r.config) for r in df.collect()] == [(False, 0, [7], 0)] * 2
 
 
 def test_malformed_routes_file_rejected(spark, tmp_path):
@@ -224,10 +223,14 @@ def test_job_dangling_relation_emits_410_verdict(spark, tmp_path):
 
 
 def test_job_per_file_configs(spark, tmp_path):
-    """Two routes files differing in naptanPlatformTags must each be
-    validated under their OWN config (scripts/validate/main.go:70-74):
-    the same naptan-less platform node is a verdict only for the file
-    that enables the check."""
+    """Routes files differing in naptanPlatformTags,
+    ignoreTraversalDirectionWays and minimumNodeMembers /
+    minimumRouteVariants must each be validated under their OWN config
+    (scripts/validate/main.go:70-74), in one plan: the verdicts equal
+    the union of one run per file. A relation listed in two files is
+    validated under both configs, a gone id listed in two files gets
+    two verdicts, and a master passes its config to the routes it
+    lists."""
     from osm_pt_validator_spark.fixtures import (
         member,
         relation_row,
@@ -241,32 +244,89 @@ def test_job_per_file_configs(spark, tmp_path):
         150,
         {"public_transport": "platform", "highway": "bus_stop", "name": "P"},
     )
-    mk = lambda rid: relation_row(  # noqa: E731
-        rid,
-        stop_members(102, 104) + [member("node", 150, "platform")] + way_members(3, 4),
-        route_tags(),
-    )
+    master_tags = {"type": "route_master", "name": "M", "ref": "M", "operator": "Op"}
     tables = tmp_path / "tables"
-    _write_tables(spark, tables, [mk(9101), mk(9102)], extra_nodes=[platform_no_naptan])
+    _write_tables(
+        spark,
+        tables,
+        [
+            # naptan-less platform: a verdict only where naptan is on
+            relation_row(
+                9101,
+                stop_members(102, 104) + [member("node", 150, "platform")] + way_members(3, 4),
+                route_tags(),
+            ),
+            # a gap: a verdict under every config
+            relation_row(9102, stop_members(100, 102) + way_members(1, 3), route_tags()),
+            # way 7 is a oneway traversed backwards
+            relation_row(9103, stop_members(107, 110) + way_members(5, 7), route_tags()),
+            relation_row(9104, stop_members(102, 104) + way_members(3, 4), route_tags()),
+            relation_row(
+                9105,
+                [member("relation", r) for r in (9101, 9103, 404404)],
+                master_tags,
+            ),
+        ],
+        extra_nodes=[platform_no_naptan],
+    )
 
     routes = tmp_path / "routes"
     os.makedirs(routes)
-    for fname, naptan, rid in [("a.json", False, 9101), ("b.json", True, 9102)]:
+    files = {
+        "a.json": ({"naptanPlatformTags": False, "ignoreTraversalDirectionWays": [7]},
+                   [9101, 9102, 9103, 404404]),
+        "b.json": ({"naptanPlatformTags": True}, [9101, 9102, 9103]),
+        "c.json": ({"minimumNodeMembers": 3, "minimumRouteVariants": 4},
+                   [9104, 9105, 404404]),
+    }
+    for fname, (config, ids) in files.items():
         with open(routes / fname, "w") as f:
             json.dump(
-                {"config": {"naptanPlatformTags": naptan},
-                 "routes": {"g": [{"name": "r", "relation_id": rid}]}},
+                {"config": config,
+                 "routes": {"g": [{"name": "r", "relation_id": rid} for rid in ids]}},
                 f,
             )
 
-    out = tmp_path / "out"
-    rc = main(["--tables", str(tables), "--routes", str(routes), "--out", str(out), "--cpus", "4"])
+    def run(name, path):
+        out = tmp_path / name
+        rc = main(["--tables", str(tables), "--routes", str(path), "--out", str(out),
+                   "--cpus", "4"])
+        rows = spark.read.parquet(str(out / "verdicts")).collect()
+        return rc, sorted(tuple(r) for r in rows)
+
+    rc, got = run("out", routes)
     assert rc == 1
-    verdicts = spark.read.parquet(str(out / "verdicts"))
-    rows = sorted((r.relation_id, r.message) for r in verdicts.collect())
-    # identical relations, identical node — only the naptan=true file's
-    # relation gets the verdict
-    assert rows == [(9102, "missing tag 'naptan:AtcoCode'")]
+    per_file = sorted(
+        row for fname in files for row in run(f"out_{fname}", routes / fname)[1]
+    )
+    assert got == per_file
+
+    msgs = [(r[0], r[4]) for r in got]
+    assert msgs.count((9101, "missing tag 'naptan:AtcoCode'")) == 1
+    assert msgs.count((9102, "ways are incorrectly ordered")) == 2
+    # b, and c through master 9105; a ignores way 7
+    assert msgs.count((9103, "way with oneway tag is traversed in wrong direction")) == 2
+    assert msgs.count((9103, "relation does not have enough node members")) == 1
+    assert msgs.count((9104, "relation does not have enough node members")) == 1
+    assert msgs.count((9105, "not enough route variants")) == 1
+    assert msgs.count((404404, "relation no longer exists")) == 2
+
+
+@pytest.mark.parametrize("rid", ["0", "-1"])
+def test_relation_id_below_one_rejected(spark, tmp_path, rid):
+    """--relation-id 0 is a relation id like any other below 1 (F6
+    drops them from a work list), not "unset": the job refuses it
+    rather than validating every relation."""
+    from osm_pt_validator_spark.fixtures import relation_row, route_tags, way_members
+    from osm_pt_validator_spark.jobs import main
+
+    tables = tmp_path / "tables"
+    _write_tables(spark, tables, [relation_row(9001, way_members(1, 3), route_tags())])
+    with pytest.raises(SystemExit) as exc:
+        main(["--tables", str(tables), "--out", str(tmp_path / "out"),
+              "--relation-id", rid, "--cpus", "4"])
+    assert exc.value.code == 2
+    assert not (tmp_path / "out").exists()
 
 
 def test_relation_id_mode_defaults_naptan_false(spark, tmp_path):
